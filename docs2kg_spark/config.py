@@ -160,12 +160,6 @@ class PipelineConfig:
     # None = operators.graph.LAYOUT_SCHEMA.  The config analog of the
     # reference's per-project schema.json (layout_kg.py:127-147).
     layout_schema: tuple[tuple[str, tuple[str, ...]], ...] | None = None
-    # >1 salts the relation seg_id self-join (relations.cooccurrence_triples):
-    # shuffle key becomes (seg_id, _salt) so one pathological segment's
-    # pair generation spreads over this many reducers.  0/1 = unsalted
-    # (AQE skew-split is the always-on backstop); output is identical
-    # either way (parity-tested in tests/test_relations.py).
-    relation_salts: int = 0
     # >0 switches segmentation to the two-phase bucketed numbering
     # (segment_transcripts_bucketed): the conv_id ordering key is salted
     # by turn-range bucket so one enormous conversation spreads over

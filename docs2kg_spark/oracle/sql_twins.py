@@ -14,15 +14,59 @@ test corpus is pure ASCII (verified over sf0.001/0.01/0.1); the Spark
 side hashes utf-8 bytes, so a non-ASCII corpus would need a BLOB-indexed
 variant of the same SQL.
 
+The KG-stage twins (kg_*_sql) read a relation named ``transcripts``
+with the pipeline's input columns (conv_id, turn_idx, role, text, tool);
+``TRANSCRIPTS_CTE`` derives one from the test corpus's ``documents``
+table.  tests/test_kg_twins.py compares each KG-stage twin with the
+table ``plans/pipeline.py::run_pipeline`` writes.
+
 Spark twins: operators/dedup.py::minhash_near_dup_pairs,
-operators/linking.py (_shingle_hashes/_perm_params/make_jaccard_udf).
+operators/segments.py, operators/mentions.py,
+operators/linking.py (_shingle_hashes/_perm_params/make_jaccard_udf),
+operators/graph.py.
 Reference parity anchor: the reference's entity-unification semantics at
 utils/neo4j_loader.py:153-230 (see operators/linking.py docstring).
 """
 
 from __future__ import annotations
 
-from docs2kg_spark.config import PipelineConfig
+from docs2kg_spark.config import DEFAULT_GAZETTEER, PipelineConfig
+
+# ---------------------------------------------------------------------------
+# derived transcript input
+# ---------------------------------------------------------------------------
+#
+# A deterministic transcript table over the test corpus's `documents`
+# (doc_id, text, source): 50 conversations, roles cycling by doc_id, and
+# two gazetteer surfaces injected into every turn so extraction, linking
+# and relations all see real work.
+
+_SURFACES = [e for e, _ in DEFAULT_GAZETTEER]
+_N_INJECT = 16
+# (idx, s0, s1): the entity-injection table
+_INJECT = [
+    (i, _SURFACES[i % len(_SURFACES)], _SURFACES[(i * 7 + 3) % len(_SURFACES)])
+    for i in range(_N_INJECT)
+]
+_INJECT_VALUES = ", ".join(f"({i}, '{a.replace(chr(39), chr(39)*2)}', '{b.replace(chr(39), chr(39)*2)}')" for i, a, b in _INJECT)
+
+_ROLE_CASE_SQL = (
+    "CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'system' WHEN 1 THEN 'user' "
+    "WHEN 2 THEN 'assistant' ELSE 'tool' END"
+)
+
+# CTE chain ending in `transcripts` (DuckDB dialect; reads `documents`)
+TRANSCRIPTS_CTE = f"""
+inject(idx, s0, s1) AS (VALUES {_INJECT_VALUES}),
+transcripts AS (
+  SELECT printf('conv-%04d', CAST(d.doc_id % 50 AS INT)) AS conv_id,
+         CAST(ROW_NUMBER() OVER (PARTITION BY d.doc_id % 50 ORDER BY d.doc_id) - 1 AS INT) AS turn_idx,
+         {_ROLE_CASE_SQL} AS role,
+         d.text || ' update: ' || i.s0 || '; owner is ' || i.s1 || '.' AS text,
+         CASE WHEN d.doc_id % 4 = 3 THEN d.source END AS tool
+  FROM documents d JOIN inject i ON CAST(d.doc_id % {_N_INJECT} AS INT) = i.idx
+)
+"""
 
 _MOD = 1 << 64  # wrap-around modulus of every uint64 hash
 _FNV_PRIME = 1099511628211
@@ -261,6 +305,7 @@ segs AS MATERIALIZED (
   SELECT conv_id,
          substr(sha256(conv_id || '|' || CAST(turn_idx AS VARCHAR) || '|' || text), 1, 32) AS seg_id,
          CAST(ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1 AS INT) AS seg_idx,
+         turn_idx, role, tool,
          CASE role WHEN 'system' THEN 'H1' WHEN 'tool' THEN 'CODE' ELSE 'P' END AS label,
          text, lower(text) AS lt
   FROM transcripts WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
@@ -352,6 +397,14 @@ mentions AS MATERIALIZED (
     FROM (SELECT * FROM gmatch UNION ALL SELECT * FROM lmatch)
   ) WHERE rn = 1
 )"""
+
+
+def kg_segments_sql(transcripts_cte: str) -> str:
+    return f"""
+WITH {transcripts_cte.strip().rstrip(',')},
+{_segments_cte().strip()}
+SELECT conv_id, seg_id, seg_idx, turn_idx, label, role, tool, text FROM segs
+"""
 
 
 def kg_mentions_sql(transcripts_cte: str, min_judge_len: int | None = None) -> str:
@@ -600,6 +653,17 @@ SELECT src, dst, type FROM (
   LEFT JOIN cmap cs ON cs.node_id = {ent_s}
   LEFT JOIN cmap cd ON cd.node_id = {ent_o}
 )
+"""
+
+
+def kg_metadata_edges_sql(transcripts_cte: str) -> str:
+    """Twin of operators/graph.py::conversation_metadata_kg edges:
+    distinct HAS_ROLE / HAS_TOOL edges from each conversation."""
+    return f"""
+WITH {transcripts_cte.strip().rstrip(',')}
+SELECT DISTINCT 'doc_' || conv_id AS source, 'role_' || role AS target, 'HAS_ROLE' AS type FROM transcripts
+UNION
+SELECT DISTINCT 'doc_' || conv_id, 'tool_' || tool, 'HAS_TOOL' FROM transcripts WHERE tool IS NOT NULL
 """
 
 

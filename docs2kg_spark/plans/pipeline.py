@@ -187,29 +187,22 @@ def run_pipeline(
             store.write_marker("metadata_edges", fp)
             stage_times["metadata_nodes"] = time.monotonic() - t0
 
-        import os as _os
-
         # Overlapping the metadata branch with the extraction critical path
         # measured NEGATIVE at high local parallelism (local[32]: +50s — its
         # shuffle/write tasks interleave into the Arrow-UDF stage's slots and
         # strangle it) but POSITIVE at low (local[8]: −4s, where the branch
-        # is otherwise a pure serial insertion).  Default: overlap on real
+        # is otherwise a pure serial insertion).  So: overlap on real
         # clusters (the branch's tasks land on OTHER executors) and in
-        # local mode up to 8 slots; serial above that.  DOCS2KG_OVERLAP_META
-        # overrides either way.
+        # local mode up to 8 slots; serial above that.
         # The paired same-stage table writes (mentions+triples,
         # kg_nodes+kg_edges) measured POSITIVE at both levels (local[32]:
         # 37s vs 55s serial) — two jobs over the SAME checkpointed input keep
-        # all slots busy through each other's write tails — so they stay
-        # concurrent by default.
-        _ov = _os.environ.get("DOCS2KG_OVERLAP_META")
-        if _ov is not None:
-            overlap_meta = _ov != "0"
-        elif spark.sparkContext.master.startswith("local"):
-            overlap_meta = spark.sparkContext.defaultParallelism <= 8
-        else:
-            overlap_meta = True
-        paired_writes = _os.environ.get("DOCS2KG_PAIRED_WRITES", "1") != "0"
+        # all slots busy through each other's write tails — so they always
+        # run concurrently.
+        overlap_meta = (
+            not spark.sparkContext.master.startswith("local")
+            or spark.sparkContext.defaultParallelism <= 8
+        )
         if resume and store.stage_complete("metadata_nodes", fp) and store.exists("metadata_nodes"):
             stage_times["metadata_nodes"] = 0.0
             meta_future = None
@@ -259,15 +252,11 @@ def run_pipeline(
                 store.write(df, name)
                 return time.monotonic() - s
 
-            if paired_writes:
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fm = pool.submit(_timed_write, mentions_df, "mentions")
-                    ft = pool.submit(_timed_write, triples_df, "triples")
-                    stage_times["x_mentions_write"] = fm.result()
-                    stage_times["triples"] = ft.result()
-            else:
-                stage_times["x_mentions_write"] = _timed_write(mentions_df, "mentions")
-                stage_times["triples"] = _timed_write(triples_df, "triples")
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fm = pool.submit(_timed_write, mentions_df, "mentions")
+                ft = pool.submit(_timed_write, triples_df, "triples")
+                stage_times["x_mentions_write"] = fm.result()
+                stage_times["triples"] = ft.result()
             store.write_marker("mentions", fp)
             store.write_marker("triples", fp)
             stage_times["mentions"] = time.monotonic() - t0
@@ -309,16 +298,12 @@ def run_pipeline(
                 store.write(df, name)
                 return time.monotonic() - s
 
-            if paired_writes:
-                # node and edge tables share inputs but not outputs → concurrent
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fn = pool.submit(_timed_store_write, nodes_df, "kg_nodes")
-                    fe = pool.submit(_timed_store_write, edges_df, "kg_edges")
-                    stage_times["x_kg_nodes_write"] = fn.result()
-                    stage_times["x_kg_edges_write"] = fe.result()
-            else:
-                stage_times["x_kg_nodes_write"] = _timed_store_write(nodes_df, "kg_nodes")
-                stage_times["x_kg_edges_write"] = _timed_store_write(edges_df, "kg_edges")
+            # node and edge tables share inputs but not outputs → concurrent
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fn = pool.submit(_timed_store_write, nodes_df, "kg_nodes")
+                fe = pool.submit(_timed_store_write, edges_df, "kg_edges")
+                stage_times["x_kg_nodes_write"] = fn.result()
+                stage_times["x_kg_edges_write"] = fe.result()
             store.write_marker("kg_nodes", fp)
             store.write_marker("kg_edges", fp)
             stage_times["kg_nodes"] = time.monotonic() - t0

@@ -7,17 +7,7 @@ __init__ re-exports every name, driver contract unchanged).
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from docs2kg_spark.config import DEFAULT_GAZETTEER
-from docs2kg_spark.functions.ids import WS_RE
-from docs2kg_spark.oracle.sql_twins import (
-    kg_canonical_map_sql,
-    kg_edges_sql,
-    kg_mentions_sql,
-    kg_nodes_sql,
-    kg_triples_sql,
-    minhash_estimator_audit_sql,
-    minhash_near_dup_sql,
-)
+from docs2kg_spark.oracle.sql_twins import _INJECT, _N_INJECT, TRANSCRIPTS_CTE
 
 
 # ---------------------------------------------------------------------------
@@ -90,40 +80,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# deterministic entity-injection table: (idx, s0, s1) — the same constants
-# are embedded in the oracle SQL via _INJECT_VALUES
-_SURFACES = [e for e, _ in DEFAULT_GAZETTEER]
-_N_INJECT = 16
-_INJECT = [
-    (i, _SURFACES[i % len(_SURFACES)], _SURFACES[(i * 7 + 3) % len(_SURFACES)])
-    for i in range(_N_INJECT)
-]
-_INJECT_VALUES = ", ".join(f"({i}, '{a.replace(chr(39), chr(39)*2)}', '{b.replace(chr(39), chr(39)*2)}')" for i, a, b in _INJECT)
-
-_ROLE_CASE_SQL = (
-    "CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'system' WHEN 1 THEN 'user' "
-    "WHEN 2 THEN 'assistant' ELSE 'tool' END"
-)
-
-# SQL CTE producing the derived transcript table (DuckDB dialect; the
-# Spark twin is derive_transcripts below)
-TRANSCRIPTS_CTE = f"""
-inject(idx, s0, s1) AS (VALUES {_INJECT_VALUES}),
-transcripts AS (
-  SELECT printf('conv-%04d', CAST(d.doc_id % 50 AS INT)) AS conv_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY d.doc_id % 50 ORDER BY d.doc_id) - 1 AS INT) AS turn_idx,
-         {_ROLE_CASE_SQL} AS role,
-         d.text || ' update: ' || i.s0 || '; owner is ' || i.s1 || '.' AS text,
-         CASE WHEN d.doc_id % 4 = 3 THEN d.source END AS tool
-  FROM documents d JOIN inject i ON CAST(d.doc_id % {_N_INJECT} AS INT) = i.idx
-)
-"""
-
-
 @_pkg_patchable
 def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic transcript table derived from documents — the exact
-    Spark twin of TRANSCRIPTS_CTE."""
+    Spark twin of oracle/sql_twins.py::TRANSCRIPTS_CTE."""
     docs = _t(spark, sf_dir, "documents")
     inject = spark.createDataFrame(_INJECT, "idx int, s0 string, s1 string")
     w = Window.partitionBy(F.col("doc_id") % 50).orderBy("doc_id")

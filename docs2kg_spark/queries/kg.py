@@ -13,7 +13,9 @@ from docs2kg_spark.oracle.sql_twins import (
     kg_canonical_map_sql,
     kg_edges_sql,
     kg_mentions_sql,
+    kg_metadata_edges_sql,
     kg_nodes_sql,
+    kg_segments_sql,
     kg_triples_sql,
     minhash_estimator_audit_sql,
     minhash_near_dup_sql,
@@ -49,19 +51,10 @@ def q_kg_segments(spark, sf_dir):
     return segs.select("conv_id", "seg_id", "seg_idx", "turn_idx", "label", "text")
 
 
-SQL_KG_SEGMENTS = f"""
-WITH {TRANSCRIPTS_CTE},
-kept AS (
-  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1 AS INT) AS seg_idx
-  FROM transcripts WHERE text IS NOT NULL AND regexp_matches(text, '\\S')
+SQL_KG_SEGMENTS = (
+    "SELECT conv_id, seg_id, seg_idx, turn_idx, label, text "
+    f"FROM ({kg_segments_sql(TRANSCRIPTS_CTE)})"
 )
-SELECT conv_id,
-       substr(sha256(conv_id || '|' || CAST(turn_idx AS VARCHAR) || '|' || text), 1, 32) AS seg_id,
-       seg_idx, turn_idx,
-       CASE role WHEN 'system' THEN 'H1' WHEN 'tool' THEN 'CODE' ELSE 'P' END AS label,
-       text
-FROM kept
-"""
 
 
 def q_kg_turn_invariant(spark, sf_dir):
@@ -95,12 +88,7 @@ def q_kg_conv_metadata_edges(spark, sf_dir):
     return edges
 
 
-SQL_KG_CONV_META_EDGES = f"""
-WITH {TRANSCRIPTS_CTE}
-SELECT DISTINCT 'doc_' || conv_id AS source, 'role_' || role AS target, 'HAS_ROLE' AS type FROM transcripts
-UNION
-SELECT DISTINCT 'doc_' || conv_id, 'tool_' || tool, 'HAS_TOOL' FROM transcripts WHERE tool IS NOT NULL
-"""
+SQL_KG_CONV_META_EDGES = kg_metadata_edges_sql(TRANSCRIPTS_CTE)
 
 
 @_pkg_patchable

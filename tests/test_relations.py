@@ -85,8 +85,8 @@ def test_triples_sql_twin_duckdb(spark, transcripts_df):
 
 def test_salted_self_join_parity(spark, transcripts_df):
     # the (seg_id, _salt) salted shuffle must be output-identical to the
-    # plain seg_id self-join (functions/skew.py wiring, config knob
-    # relation_salts)
+    # plain seg_id self-join (functions/skew.py wiring, the n_salts
+    # argument)
     segs = segment_transcripts(transcripts_df)
     m = extract_mentions(segs, spark)
     plain = {
