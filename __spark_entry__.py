@@ -25,15 +25,12 @@ def entry(spark: SparkSession) -> DataFrame:
     co-occurrence triples) over transcripts derived deterministically
     from sf0.001 documents, returning top entity pairs by co-occurrence
     count (SURVEY.md §7 phase-1 flagship)."""
-    from docs2kg_spark.operators.mentions import extract_mentions
-    from docs2kg_spark.operators.relations import cooccurrence_triples
+    from docs2kg_spark.operators.mentions import extract_fused
     from docs2kg_spark.operators.segments import segment_transcripts
     from docs2kg_spark.queries import derive_transcripts
 
     t = derive_transcripts(spark, "/root/testdata/sf0.001")
-    segs = segment_transcripts(t)
-    mentions = extract_mentions(segs, spark)
-    triples = cooccurrence_triples(mentions, spark)
+    _, _, triples = extract_fused(segment_transcripts(t), spark)
     return (
         triples.groupBy("subj", "pred", "obj")
         .agg(F.count("*").alias("n_cooccur"))

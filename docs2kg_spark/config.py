@@ -131,21 +131,9 @@ class PipelineConfig:
     # distributed loop: the edge set is orders of magnitude smaller than
     # the mention table (it exists only where surfaces near-duplicate),
     # so small/medium graphs pay 1 job instead of rounds x checkpoints.
-    # Above it, the DataFrame-join min-label loop runs (the 10^12-turn
+    # Above it, the large-star/small-star loop runs (the 10^12-turn
     # path; force it everywhere with cc_driver_max_edges=0).
     cc_driver_max_edges: int = 200_000
-    # distributed CC algorithm above cc_driver_max_edges:
-    #  "star"        — alternating large-star/small-star (Kiveris et al.,
-    #                  SoCC'14), the algorithm BASELINE.json::north_star
-    #                  names; per round two grouped-min joins over the
-    #                  shrinking edge set, O(log^2 n) rounds worst case
-    #                  but edges collapse toward stars monotonically so
-    #                  late rounds are near-free;
-    #  "hash_to_min" — min-label propagation over the static edge set,
-    #                  O(diameter) rounds of constant-size joins.
-    # Both produce identical (node_id -> min-id component) labels
-    # (parity-tested in tests/test_linking.py).
-    cc_algorithm: str = "star"
     # When the distinct (text,label) surface vocabulary fits under this
     # bound, the WHOLE linking stage (MinHash -> LSH banding -> block cap
     # -> Jaccard verify -> CC) runs on the driver from one collect: the

@@ -326,20 +326,24 @@ class TableStore:
             return self.snapshot_write(delta, name, op="merge")
         base = self.snapshot_read(name)
         merged = base.join(delta.select(*keys).distinct(), on=keys, how="left_anti").unionByName(delta)
-        # materialize BEFORE the commit dir write begins so the new
-        # snapshot never reads its own partially-written files
+        # safe without materializing first: the plan reads the current
+        # snapshot's immutable dir and the commit writes a fresh snap-{id}
+        # dir, so the new snapshot never reads its own files
         return self.snapshot_write(merged, name, op="merge")
 
     def expire_snapshots(self, name: str, keep_last: int = 2) -> list[int]:
         """Prune all but the last ``keep_last`` snapshots (Iceberg's
         expire_snapshots maintenance action): their data dirs are
-        deleted and their ids become unreadable; returns expired ids."""
+        deleted and their ids become unreadable; returns expired ids.
+        The pruned log commits BEFORE any dir is deleted, so a crash
+        mid-delete leaves only unreachable dirs, never a log entry that
+        points at a half-deleted snapshot."""
         log = self._vlog(name)
         drop, keep = log["snapshots"][:-keep_last], log["snapshots"][-keep_last:]
-        for s in drop:
-            shutil.rmtree(os.path.join(self.path(name), s["dir"]), ignore_errors=True)
         log["snapshots"] = keep
         self._vlog_commit(name, log)
+        for s in drop:
+            shutil.rmtree(os.path.join(self.path(name), s["dir"]), ignore_errors=True)
         return [s["id"] for s in drop]
 
     # ---- stage markers (resume support) --------------------------------

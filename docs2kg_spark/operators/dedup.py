@@ -404,8 +404,8 @@ def doc_dedup_map(
 
     Scale shape: pairs come from the banded LSH join (never all-pairs);
     the CC fixpoint is the linker's hybrid (driver union-find under
-    cc_driver_max_edges, else the distributed min-label loop with
-    per-round localCheckpoint).  Ids are compared AS STRINGS on both
+    cc_driver_max_edges, else the distributed large-star/small-star loop
+    with per-round localCheckpoint).  Ids are compared AS STRINGS on both
     engines so the min-survivor choice is engine-independent."""
     from docs2kg_spark.operators.linking import connected_components
 

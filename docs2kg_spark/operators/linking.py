@@ -14,13 +14,19 @@ near-duplicate surface linking (per BASELINE.json::north_star):
    candidate pairs; degenerate blocks are capped and the drop is
    *counted and returned*, never silent (SURVEY.md §4.3.3);
 4. exact Jaccard verification of candidates (pandas UDF) ≥ threshold;
-5. connected components in DataFrame joins — alternating
-   large-star/small-star (Kiveris et al. SoCC'14, the default and the
-   algorithm north_star names) or min-label propagation
-   (cfg.cc_algorithm), both bounded by cc_max_rounds with
+5. connected components: a driver-side min-id union-find when the
+   verified edges fit under cc_driver_max_edges, else alternating
+   large-star/small-star in DataFrame joins (Kiveris et al. SoCC'14,
+   the algorithm north_star names), bounded by cc_max_rounds with
    localCheckpoint lineage cuts (SURVEY.md §4.4); survivor =
    min(node_id) — the deterministic replacement for Cypher's
    arbitrary-first (neo4j_loader.py:171-174).
+
+Small vocabularies run steps 2-5 on the driver from one collect
+(_canonical_driver_side).  Both routes share one MinHash signature
+(_minhash_signature), one char-shingle Jaccard (_jaccard) and one
+union-find (_min_id_components), so they differ only in where the work
+runs; exact verification means banding decides cost, never output.
 
 Scale notes: band self-join is the only potentially-skewed shuffle and
 is protected by the block cap + AQE skew-join; the CC loop operates on
@@ -80,19 +86,58 @@ def entity_nodes(mentions: DataFrame) -> DataFrame:
     )
 
 
+def _minhash_signature(text: str | None, k: int, a_params: np.ndarray, b_params: np.ndarray) -> np.ndarray:
+    """uint64 MinHash signature: (a*x + b) wrapping mod 2^64, min over
+    the shingle hashes, per permutation."""
+    hv = _shingle_hashes(text or "", k)
+    return (a_params[:, None] * hv[None, :] + b_params[:, None]).min(axis=1)
+
+
+def _char_shingles(s: str | None, k: int) -> set:
+    s = (s or "").lower()
+    if len(s) <= k:
+        return {s}
+    return {s[i : i + k] for i in range(len(s) - k + 1)}
+
+
+def _jaccard(x: str | None, y: str | None, k: int) -> float:
+    """exact Jaccard of the character k-shingle sets of lower(x), lower(y)."""
+    sx, sy = _char_shingles(x, k), _char_shingles(y, k)
+    union = len(sx | sy)
+    return len(sx & sy) / union if union else 1.0
+
+
+def _min_id_components(edges) -> dict[str, str]:
+    """Union-find over (a, b) pairs with the smaller root always kept, so
+    every root is its component's min id.  Returns node → root for the
+    nodes that are not roots; absent nodes map to themselves."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in list(parent)}
+
+
 def make_minhash_udf(cfg: PipelineConfig):
-    n_perms, k = cfg.minhash_perms, cfg.shingle_k
-    a_params, b_params = _perm_params(n_perms)
+    k = cfg.shingle_k
+    a_params, b_params = _perm_params(cfg.minhash_perms)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def minhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            hv = _shingle_hashes(t or "", k)
-            # (a*x + b) wrapping mod 2^64, min over shingles, per permutation
-            sig = (a_params[:, None] * hv[None, :] + b_params[:, None]).min(axis=1)
-            out.append(sig.view(np.int64).tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [_minhash_signature(t, k, a_params, b_params).view(np.int64).tolist() for t in texts]
+        )
 
     return minhash
 
@@ -102,18 +147,7 @@ def make_jaccard_udf(cfg: PipelineConfig):
 
     @pandas_udf(T.DoubleType())
     def jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-        def _shingles(s: str) -> set:
-            s = (s or "").lower()
-            if len(s) <= k:
-                return {s}
-            return {s[i : i + k] for i in range(len(s) - k + 1)}
-
-        out = []
-        for x, y in zip(a, b):
-            sx, sy = _shingles(x), _shingles(y)
-            union = len(sx | sy)
-            out.append(len(sx & sy) / union if union else 1.0)
-        return pd.Series(out)
+        return pd.Series([_jaccard(x, y, k) for x, y in zip(a, b)])
 
     return jaccard
 
@@ -223,33 +257,12 @@ def verified_edges(pairs: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _cc_driver_side(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Union-find over a collected edge list — identical (node_id →
-    min-id component) semantics to the distributed loop, in one job.
-    Only called when the verified edge count is under
-    cfg.cc_driver_max_edges; the edge set is the graph of *near-dup
-    surface pairs*, which is tiny relative to mentions/nodes."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for row in edges.collect():
-        ra, rb = find(row["a"]), find(row["b"])
-        if ra != rb:
-            # min-id root ⇒ the component label IS the survivor id
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    labels = [(x, find(x)) for x in list(parent)]
-    spark = nodes.sparkSession
-    if labels:
-        ldf = spark.createDataFrame(labels, "node_id string, comp string")
-    else:
-        ldf = spark.createDataFrame([], "node_id string, comp string")
+    """Min-id union-find over a collected edge list, in one job.  Only
+    called when the verified edge count is under cfg.cc_driver_max_edges;
+    the edge set is the graph of *near-dup surface pairs*, which is tiny
+    relative to mentions/nodes."""
+    labels = list(_min_id_components((r["a"], r["b"]) for r in edges.collect()).items())
+    ldf = nodes.sparkSession.createDataFrame(labels, "node_id string, comp string")
     return (
         nodes.select("node_id")
         .join(F.broadcast(ldf), on="node_id", how="left")
@@ -262,8 +275,7 @@ def _cc_star(nodes: DataFrame, edges: DataFrame, cfg: PipelineConfig) -> DataFra
     et al., "Connected Components in MapReduce and Beyond", SoCC'14) in
     DataFrame joins — the algorithm named by BASELINE.json::north_star.
 
-    The edge set itself is rewritten each half-round (unlike hash-to-min,
-    which joins labels against a static edge set):
+    The edge set itself is rewritten each half-round:
 
     - large-star: group neighborhoods in BOTH directions by u with
       m = min(Γ(u) ∪ {u}); every neighbor v > u is re-pointed at m.
@@ -347,70 +359,18 @@ def _cc_star(nodes: DataFrame, edges: DataFrame, cfg: PipelineConfig) -> DataFra
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """min-label propagation over (a,b) edges → (node_id, canonical_id).
-
-    Each round: propagate current component ids across edges (both
-    directions), take the min per node; stop when nothing changed or at
-    cfg.cc_max_rounds (near-dup clusters have tiny diameters, so
-    convergence is fast; the bound makes the driver loop total).
+    """(a,b) edges → (node_id, canonical_id), canonical_id = the min
+    node_id of the component.
 
     Hybrid dispatch: the verified-edge graph is materialized once and
-    counted; at or under cfg.cc_driver_max_edges the fixpoint collapses
-    to a driver-side union-find (1 job instead of rounds x 2-shuffle
-    jobs + checkpoints — measured ~4s saved per pipeline run at sandbox
-    sizes), above it the distributed loop runs."""
-    if cfg.cc_algorithm not in ("star", "hash_to_min"):
-        # an unvalidated typo ('Star', 'large_star') would silently fall
-        # through to hash-to-min, which needs O(diameter) rounds where
-        # star converges in O(log^2 n) — fail loudly instead
-        raise ValueError(
-            f"cc_algorithm must be 'star' or 'hash_to_min', got {cfg.cc_algorithm!r}"
-        )
+    counted; at or under cfg.cc_driver_max_edges it resolves with a
+    driver-side union-find (1 job instead of rounds x 2-shuffle jobs +
+    checkpoints — measured ~4s saved per pipeline run at sandbox sizes),
+    above it the distributed large-star/small-star loop runs."""
     edges = edges.localCheckpoint()
     if edges.count() <= cfg.cc_driver_max_edges:
         return _cc_driver_side(nodes, edges)
-    if cfg.cc_algorithm == "star":
-        return _cc_star(nodes, edges, cfg)
-    both = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # only nodes that appear in any edge need iterating; singletons map to themselves
-    edge_nodes = both.select(F.col("a").alias("node_id")).distinct()
-    labels = edge_nodes.withColumn("comp", F.col("node_id")).localCheckpoint()
-    both = both.localCheckpoint()
-
-    converged = False
-    for _ in range(cfg.cc_max_rounds):
-        # ONE job per round: propagate + min-reduce + convergence check via
-        # observation metrics, materialized by the eager localCheckpoint
-        # (cuts the per-round job count 3x vs a separate count())
-        msgs = both.join(labels, on=both.a == labels.node_id).select(
-            F.col("b").alias("node_id"), F.col("comp"), F.lit(0).alias("is_old")
-        )
-        merged = msgs.union(labels.withColumn("is_old", F.lit(1)))
-        new_labels = merged.groupBy("node_id").agg(
-            F.min("comp").alias("comp"),
-            F.max(F.when(F.col("is_old") == 1, F.col("comp"))).alias("old_comp"),
-        )
-        obs = Observation()
-        observed = new_labels.observe(
-            obs, F.sum((F.col("comp") != F.col("old_comp")).cast("long")).alias("changed")
-        )
-        labels = observed.select("node_id", "comp").localCheckpoint()
-        if obs.get["changed"] == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"hash_to_min CC hit cc_max_rounds={cfg.cc_max_rounds} without converging; "
-            "this loop needs O(graph diameter) rounds — raise cc_max_rounds or use "
-            "cc_algorithm='star' (O(log^2 n) rounds)",
-            stacklevel=2,
-        )
-
-    return (
-        nodes.select("node_id")
-        .join(labels, on="node_id", how="left")
-        .select("node_id", F.coalesce("comp", "node_id").alias("canonical_id"))
-    )
+    return _cc_star(nodes, edges, cfg)
 
 
 _BLOCK_STATS_SCHEMA = "n_blocks bigint, n_capped_blocks bigint, max_block_size bigint"
@@ -420,19 +380,15 @@ def _canonical_driver_side(rows: list, cfg: PipelineConfig) -> tuple[list, tuple
     """The whole LSH+verify+CC chain over an already-collected surface
     vocabulary — semantically identical to candidate_pairs →
     verified_edges → connected_components (parity-tested in
-    tests/test_linking.py), in zero Spark jobs.  numpy signature math is
-    shared with the distributed UDF (same _perm_params/_shingle_hashes),
-    banding groups on the raw (band, label, sig-rows) tuple the
-    distributed path sha2-hashes, and the union-find is min-id exactly
-    like _cc_driver_side."""
+    tests/test_linking.py), in zero Spark jobs.  Banding groups on the
+    raw (band, label, sig-rows) tuple the distributed path sha2-hashes."""
     a_params, b_params = _perm_params(cfg.minhash_perms)
     rows_per_band = cfg.minhash_perms // cfg.lsh_bands
     k = cfg.shingle_k
 
     blocks: dict[tuple, list] = {}
     for r in rows:
-        hv = _shingle_hashes(r["text"] or "", k)
-        sig = (a_params[:, None] * hv[None, :] + b_params[:, None]).min(axis=1)
+        sig = _minhash_signature(r["text"], k, a_params, b_params)
         for i in range(cfg.lsh_bands):
             key = (i, r["label"], tuple(int(x) for x in sig[i * rows_per_band : (i + 1) * rows_per_band]))
             blocks.setdefault(key, []).append(r)
@@ -441,12 +397,6 @@ def _canonical_driver_side(rows: list, cfg: PipelineConfig) -> tuple[list, tuple
         stats = (len(blocks), sum(1 for s in sizes if s > cfg.max_block_size), max(sizes))
     else:
         stats = (0, None, None)
-
-    def _shingles(s: str) -> set:
-        s = (s or "").lower()
-        if len(s) <= k:
-            return {s}
-        return {s[i : i + k] for i in range(len(s) - k + 1)}
 
     pairs: dict[tuple[str, str], tuple[str, str]] = {}
     for members in blocks.values():
@@ -457,28 +407,11 @@ def _canonical_driver_side(rows: list, cfg: PipelineConfig) -> tuple[list, tuple
             for j in range(i + 1, len(ms)):
                 pairs[(ms[i]["node_id"], ms[j]["node_id"])] = (ms[i]["text"], ms[j]["text"])
 
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for (a, b), (ta, tb) in pairs.items():
-        sa, sb = _shingles(ta), _shingles(tb)
-        union = len(sa | sb)
-        sim = len(sa & sb) / union if union else 1.0
-        if sim >= cfg.jaccard_threshold:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-
+    comp = _min_id_components(
+        ab for ab, (ta, tb) in pairs.items() if _jaccard(ta, tb, k) >= cfg.jaccard_threshold
+    )
     out = [
-        (r["node_id"], r["text"], r["label"], find(r["node_id"]))
+        (r["node_id"], r["text"], r["label"], comp.get(r["node_id"], r["node_id"]))
         for r in sorted(rows, key=lambda r: r["node_id"])
     ]
     return out, stats

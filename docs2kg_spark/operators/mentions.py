@@ -72,16 +72,20 @@ _LLM_CACHE: dict = {}
 # Above this many gazetteer entries the vocab-size-DEPENDENT structures
 # flip to vocab-size-INDEPENDENT ones (VERDICT r3 item 8 — throughput
 # must not collapse at a realistic 100k-surface gazetteer):
-# - the candidate alternation regex (O(|vocab|) compile, and Python re
-#   tries alternatives sequentially per position) is skipped;
-# - the tokenization-free fast matcher (first-token alternation regex,
-#   same problem) yields to the legacy token-scan path, whose dict
+# - the tokenization-free fast matcher (first-token alternation regex —
+#   O(|vocab|) compile, and Python re tries alternatives sequentially
+#   per position) yields to the legacy token-scan path, whose dict
 #   probe is O(tokens) regardless of vocabulary size;
 # - the LLM-path per-surface substring presence scan (O(|vocab|·|text|)
 #   per segment — the real killer) becomes ONE Aho-Corasick pass over
 #   the text (O(|text|) amortized), built once per worker and cached.
 # Output is bit-identical across the routes (parity fuzz-tested); the
 # threshold only moves work between algorithms with the same semantics.
+# Both routes earn their place on measured per-text kernel time (4 vCPUs,
+# pure-Python kernel): on the sf0.001 `documents` texts the fast matcher
+# takes 45.4 µs/text against 72.6 for the token scan; on a 3,380-surface
+# open vocabulary token scan + Aho-Corasick takes 183 µs/text against 300
+# with per-surface `in` and 472 with the small-vocab route.
 _LARGE_VOCAB = 2048
 
 
@@ -246,34 +250,20 @@ def _next_token_isalpha(lowered, pos):
     return lowered[i:j].isalpha()
 
 
-def _build_candidate_rx(gazetteer):
-    """One alternation regex that any matchable segment MUST satisfy —
-    a cheap short-circuit before tokenization.  Superset argument: the
-    LLM path needs the exact lowercase surface as a substring; the token
-    path needs the pattern's word tokens consecutive, which (with a
-    maximal-munch tokenizer) means separated by whitespace only — both
-    are matched by the surface with spaces relaxed to \\s+."""
-    parts = [re.escape(e.lower()).replace(r"\ ", r"\s+") for e, _ in gazetteer]
-    return re.compile("|".join(sorted(parts, key=len, reverse=True)))
-
-
 def _get_index(gazetteer):
+    """(token index, (fast_ok, first_rx, probe)) for the gazetteer,
+    compiled once per Python worker."""
     key = hash(gazetteer)
     cached = _INDEX_CACHE.get(key)
     if cached is None:
         if len(gazetteer) >= _LARGE_VOCAB:
-            # large-vocab route: no candidate alternation regex (None →
-            # the short-circuit is skipped), no first-token alternation
-            # (fast_ok False → legacy token-scan path, O(tokens) dict
-            # probes) — both structures are O(|vocab|) per *position*
-            # under Python re and collapse at 100k surfaces.
-            cached = (_build_index(gazetteer), None, (False, None, {}))
+            # large-vocab route: no first-token alternation (fast_ok
+            # False → legacy token-scan path, O(tokens) dict probes) —
+            # the alternation is O(|vocab|) per *position* under Python
+            # re and collapses at 100k surfaces.
+            cached = (_build_index(gazetteer), (False, None, {}))
         else:
-            cached = (
-                _build_index(gazetteer),
-                _build_candidate_rx(gazetteer),
-                _build_fast_matcher(gazetteer),
-            )
+            cached = (_build_index(gazetteer), _build_fast_matcher(gazetteer))
         _INDEX_CACHE[key] = cached
     return cached
 
@@ -307,19 +297,14 @@ def _get_llm_entries(gazetteer, entity_types):
     return cached
 
 
-def _extract_one(text, llm_pack, index_and_rx, min_judge_len):
+def _extract_one(text, llm_pack, index_pack, min_judge_len):
     """Both extraction methods + dedup for one segment text.  Semantics
     mirror oracle/reference.py (which mirrors the reference, SURVEY §1.4)."""
     if not text:
         return []
     llm_entries, llm_ac = llm_pack
-    index, candidate_rx, (fast_ok, first_rx, probe) = index_and_rx
+    index, (fast_ok, first_rx, probe) = index_pack
     lowered = text.lower()
-    # short-circuit: no surface can match at all → skip tokenization
-    # (small-vocab route only; the large-vocab route has no alternation
-    # regex — its presence test is the Aho-Corasick pass below)
-    if candidate_rx is not None and candidate_rx.search(lowered) is None:
-        return []
     results = []
 
     # --- gazetteer token-sequence match (ner_spacy_match.py:84-157) ---
@@ -417,12 +402,13 @@ def _extract_one(text, llm_pack, index_and_rx, min_judge_len):
 
 
 def _triples_of(mentions, pred_map):
-    """Per-segment co-occurrence triples from the deduped mention list —
-    identical semantics to operators/relations.py::cooccurrence_triples
-    (ordered pairs, RELATES_TO fallback, first-pair-wins per
-    (subj,pred,obj)), fused into the extraction pass so the pipeline
-    needs NO shuffle for relation emission.  mentions rows are
-    (start, end, text, label, confidence, method)."""
+    """Per-segment co-occurrence triples from the deduped mention list
+    (SURVEY §2.10; semantics of oracle/reference.py::cooccurrence_triples):
+    every ordered pair of distinct (text, label) mentions in
+    (start, end, text, label) order, the ontology predicate with
+    RELATES_TO fallback, first-pair-wins per (subj, pred, obj).  Fused
+    into the extraction pass so relation emission needs NO shuffle.
+    mentions rows are (start, end, text, label, confidence, method)."""
     ms = sorted(mentions, key=lambda m: (m[0], m[1], m[2], m[3]))
     seen = set()
     out = []
@@ -464,20 +450,26 @@ def make_extract_udf(spark: SparkSession, cfg: PipelineConfig):
     return extract
 
 
-def make_extract_mentions_udf(spark: SparkSession, cfg: PipelineConfig):
-    payload = (tuple(cfg.gazetteer), tuple(cfg.ontology.entity_types), cfg.min_judge_len)
-    bc = spark.sparkContext.broadcast(payload)
+def explode_extraction(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """enriched(conv_id, seg_id, ext) → (mentions, triples): the two
+    narrow projections of the fused UDF's output.
 
-    @pandas_udf(MENTION_ARRAY)
-    def extract_mentions(texts: pd.Series) -> pd.Series:
-        gazetteer, entity_types, min_judge_len = bc.value
-        index = _get_index(gazetteer)
-        llm_entries = _get_llm_entries(gazetteer, entity_types)
-        return pd.Series(
-            [_extract_one(t, llm_entries, index, min_judge_len) for t in texts]
+    explode_outer + null-filter instead of explode: plain explode makes
+    Catalyst insert a size()>0 pre-filter on the generator input, which
+    re-evaluates the UDF — 2x the extraction cost (verified with
+    .explain("formatted"): 2 ArrowEvalPython nodes vs 1)."""
+
+    def _explode(field: str, cols: tuple[str, ...]) -> DataFrame:
+        return (
+            enriched.select("conv_id", "seg_id", F.explode_outer(f"ext.{field}").alias("x"))
+            .filter(F.col("x").isNotNull())
+            .select("conv_id", "seg_id", *[F.col(f"x.{c}").alias(c) for c in cols])
         )
 
-    return extract_mentions
+    return (
+        _explode("mentions", tuple(MENTION_STRUCT.fieldNames())),
+        _explode("triples", tuple(TRIPLE_STRUCT.fieldNames())),
+    )
 
 
 def extract_fused(
@@ -489,53 +481,11 @@ def extract_fused(
     cfg = cfg or PipelineConfig()
     udf = make_extract_udf(spark, cfg)
     enriched = segments.select("conv_id", "seg_id", udf(F.col("text")).alias("ext"))
-    # explode_outer + null-filter instead of explode: plain explode makes
-    # Catalyst insert a size()>0 pre-filter on the generator input, which
-    # re-evaluates the UDF — 2x the extraction cost (verified with
-    # .explain("formatted"): 2 ArrowEvalPython nodes vs 1)
-    mentions = enriched.select(
-        "conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m")
-    ).filter(F.col("m").isNotNull()).select(
-        "conv_id",
-        "seg_id",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.col("m.text").alias("text"),
-        F.col("m.label").alias("label"),
-        F.col("m.confidence").alias("confidence"),
-        F.col("m.method").alias("method"),
-    )
-    triples = enriched.select(
-        "conv_id", "seg_id", F.explode_outer("ext.triples").alias("t")
-    ).filter(F.col("t").isNotNull()).select(
-        "conv_id",
-        "seg_id",
-        F.col("t.subj").alias("subj"),
-        F.col("t.subj_label").alias("subj_label"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.obj_label").alias("obj_label"),
-        F.col("t.confidence").alias("confidence"),
-    )
-    return enriched, mentions, triples
+    return (enriched, *explode_extraction(enriched))
 
 
 def extract_mentions(segments: DataFrame, spark: SparkSession, cfg: PipelineConfig | None = None) -> DataFrame:
     """segments → mentions(conv_id, seg_id, start, end, text, label,
-    confidence, method).  Narrow (shuffle-free) transformation."""
-    cfg = cfg or PipelineConfig()
-    udf = make_extract_mentions_udf(spark, cfg)
-    return (
-        segments.select("conv_id", "seg_id", F.explode_outer(udf(F.col("text"))).alias("m"))
-        .filter(F.col("m").isNotNull())
-        .select(
-            "conv_id",
-            "seg_id",
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-            F.col("m.text").alias("text"),
-            F.col("m.label").alias("label"),
-            F.col("m.confidence").alias("confidence"),
-            F.col("m.method").alias("method"),
-        )
-    )
+    confidence, method): the mentions projection of extract_fused.
+    Narrow (shuffle-free) transformation."""
+    return extract_fused(segments, spark, cfg)[1]

@@ -8,7 +8,7 @@ handled explicitly" actionable: you salt what the profile shows is hot.
 
 - ``key_skew_profile``: top-N hottest keys of any column with their
   share of total rows — the direct input to choosing the ``n_salts`` of
-  relations.cooccurrence_triples / AQE skew thresholds (functions/skew.py).  Scale shape: ONE hash
+  functions/skew.py's salted join / AQE skew thresholds.  Scale shape: ONE hash
   aggregate reduces the row stream to |distinct keys|; the top-N is
   orderBy+limit = TakeOrdered (per-partition local top-N, only N rows
   reach the driver); the total joins in as a broadcast single-row agg

@@ -1,118 +1,19 @@
-"""Relation extraction: mentions → (subj, pred, obj) triples.
+"""Relation-level operators over mentions and triples: conversation
+co-mention PMI, turn-windowed co-mention, and TransE-style negative
+sampling.
 
-The reference snapshot has no automatic relation extractor — relations
-arrive from its human-annotation interface and are consumed at
-utils/neo4j_loader.py:390-409 with type defaulting to RELATES_TO.  Per
-SURVEY.md §2.10 the rebuild emits deterministic co-occurrence relations:
-every ordered pair of distinct mentions within one segment, predicate
-assigned from the ontology's (rel, src_type, dst_type) connections
-(utils/models.py:6-9) with RELATES_TO fallback.
-
-Implemented as pure DataFrame joins (no Python):
-- self-join on seg_id with a struct-lexicographic ordering predicate
-  (a_ord < b_ord reproduces the oracle's sorted i<j loop);
-- broadcast join against the tiny connections table for predicates;
-- per-(seg,subj,pred,obj) first-pair tiebreak via min(struct(...)) —
-  the deterministic equivalent of the oracle's first-seen dedup.
-
-Scale notes: the only shuffle is the seg_id equi-join (AQE skew-split
-handles pathological segments); the ontology join is broadcast; pair
-blowup is bounded per segment, not per conversation.
+The co-occurrence triples themselves (SURVEY.md §2.10: every ordered
+pair of distinct mentions within one segment, predicate from the
+ontology's (rel, src_type, dst_type) connections, utils/models.py:6-9,
+with RELATES_TO fallback) are emitted inside the fused extraction pass —
+operators/mentions.py::_triples_of — so relation emission needs no
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from docs2kg_spark.config import Ontology
-
-
-def connections_df(spark: SparkSession, ontology: Ontology) -> DataFrame:
-    return spark.createDataFrame(
-        [(rel, s, d) for rel, s, d in ontology.connections],
-        "pred string, src_type string, dst_type string",
-    )
-
-
-def cooccurrence_triples(
-    mentions: DataFrame, spark: SparkSession, ontology: Ontology | None = None,
-    n_salts: int = 0,
-) -> DataFrame:
-    """mentions → triples(conv_id, seg_id, subj, subj_label, pred, obj,
-    obj_label, confidence).
-
-    ``n_salts > 1`` salts the seg_id self-join (functions/skew.py
-    pattern): the left side gets a deterministic row-hash salt, the
-    right side replicates over all salt buckets, and the shuffle key
-    becomes (seg_id, _salt) — one pathological segment with a huge
-    mention list spreads over n_salts reducers instead of one.  Output
-    is identical (parity-tested); the cost is an n_salts× replication of
-    the right side, so it is an explicit knob (PipelineConfig) rather
-    than a default — AQE skew-split remains the always-on backstop."""
-    ontology = ontology or Ontology()
-    cols = ["conv_id", "seg_id", "start", "end", "text", "label", "confidence"]
-    a_df = mentions.select(*cols)
-    b_df = mentions.select(*cols)
-    if n_salts > 1:
-        from docs2kg_spark.functions.skew import explode_probe_side, salt_heavy_side
-
-        a_df = salt_heavy_side(a_df, "seg_id", n_salts)
-        b_df = explode_probe_side(b_df, n_salts)
-    a = a_df.alias("a")
-    b = b_df.alias("b")
-
-    a_ord = F.struct(*[F.col(f"a.{c}").alias(c) for c in ("start", "end", "text", "label")])
-    b_ord = F.struct(*[F.col(f"b.{c}").alias(c) for c in ("start", "end", "text", "label")])
-
-    join_cond = (F.col("a.seg_id") == F.col("b.seg_id")) & (a_ord < b_ord)
-    if n_salts > 1:
-        join_cond = join_cond & (F.col("a._salt") == F.col("b._salt"))
-    pairs = (
-        a.join(b, on=join_cond)
-        .filter(~((F.col("a.text") == F.col("b.text")) & (F.col("a.label") == F.col("b.label"))))
-    )
-
-    conns = F.broadcast(connections_df(spark, ontology))
-    pairs = pairs.join(
-        conns,
-        on=(F.col("a.label") == F.col("src_type")) & (F.col("b.label") == F.col("dst_type")),
-        how="left",
-    ).withColumn("pred_final", F.coalesce(F.col("pred"), F.lit("RELATES_TO")))
-
-    # first-pair-wins per (seg, subj, pred, obj): min over the pair-order
-    # struct carries the winning pair's labels + min-confidence along
-    pick = F.struct(
-        F.col("a.start").alias("a_start"),
-        F.col("a.end").alias("a_end"),
-        F.col("a.text").alias("a_text"),
-        F.col("a.label").alias("a_label"),
-        F.col("b.start").alias("b_start"),
-        F.col("b.end").alias("b_end"),
-        F.col("b.text").alias("b_text"),
-        F.col("b.label").alias("b_label"),
-        F.least(F.col("a.confidence"), F.col("b.confidence")).alias("conf"),
-    )
-    return (
-        pairs.groupBy(
-            F.col("a.conv_id").alias("conv_id"),
-            F.col("a.seg_id").alias("seg_id"),
-            F.col("a.text").alias("subj"),
-            F.col("pred_final").alias("pred"),
-            F.col("b.text").alias("obj"),
-        )
-        .agg(F.min(pick).alias("w"))
-        .select(
-            "conv_id",
-            "seg_id",
-            "subj",
-            F.col("w.a_label").alias("subj_label"),
-            "pred",
-            "obj",
-            F.col("w.b_label").alias("obj_label"),
-            F.col("w.conf").alias("confidence"),
-        )
-    )
 
 
 def comention_pmi(
@@ -138,8 +39,8 @@ def comention_pmi(
     entity VOCABULARY (distinct surfaces — bounded, linking.py's
     fast-path argument); the per-conversation distinct collapses the
     fanout BEFORE the pair self-join, which is equi-keyed on conv_id
-    (pair blowup bounded by per-conversation entity counts, the
-    relations.py bound, with AQE skew-split as backstop); then one
+    (pair blowup bounded by per-conversation entity counts, with AQE
+    skew-split as backstop); then one
     hash agg and two vocabulary-sized joins.  The PMI double is
     left-associative and structurally identical in the SQL twin
     (n_co·N / c_a / c_b), rounded to 6dp."""

@@ -22,7 +22,7 @@ table ``plans/pipeline.py::run_pipeline`` writes.
 
 Spark twins: operators/dedup.py::minhash_near_dup_pairs,
 operators/segments.py, operators/mentions.py,
-operators/linking.py (_shingle_hashes/_perm_params/make_jaccard_udf),
+operators/linking.py (_shingle_hashes/_perm_params/_char_shingles),
 operators/graph.py.
 Reference parity anchor: the reference's entity-unification semantics at
 utils/neo4j_loader.py:153-230 (see operators/linking.py docstring).
@@ -130,7 +130,7 @@ def _sig_select(n_perms: int, mat: str = "") -> str:
 
 def _char_shingle_ctes(k: int, mat: str = "") -> str:
     """(id, g): distinct character k-shingles of lower(text) — the twin
-    of make_jaccard_udf's _shingles (len<=k → the whole string)."""
+    of linking._char_shingles (len<=k → the whole string)."""
     return f"""
 jc_shingles AS {mat}(
   SELECT DISTINCT id, substr(lt, i, {k}) AS g
@@ -426,8 +426,9 @@ def _conns_values() -> str:
 
 
 def _triples_ctes() -> str:
-    """CTE `triples` — twin of operators/relations.py::cooccurrence_triples
-    over the `mentions` CTE: ordered pairs (lexicographic on the
+    """CTE `triples` — twin of operators/mentions.py::_triples_of (the
+    fused extraction's per-segment triples) over the `mentions` CTE:
+    ordered pairs (lexicographic on the
     (start,end,text,label) struct), same-surface-same-label pairs
     excluded, ontology predicate with RELATES_TO fallback, first-pair-
     wins per (seg, subj, pred, obj) via the same pair-order sort."""

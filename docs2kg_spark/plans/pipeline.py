@@ -3,17 +3,17 @@ the reference's sequential per-file loop, cli.py:174-215).
 
 transcripts ─ quarantine split
   → segments        (window ordering; checkpoint)
-  → mentions        (Arrow UDF, narrow; checkpoint)
-  → triples         (seg self-join + broadcast ontology; checkpoint)
+  → mentions        (fused Arrow UDF, narrow; checkpoint)
+  → triples         (same UDF pass, per-segment pairs; checkpoint)
   → canonical_map   (MinHash-LSH + CC fixpoint; checkpoint)
   → kg_nodes/edges  (joins through canonical_map; final tables)
   → metadata_kg     (conversation-level value nodes + HAS_* edges)
   → metrics/_lineage (per-partition counts + stage wall-times)
 
 Resume semantics (north_rule "resumable from checkpoint"): every stage
-writes a lineage marker containing the input fingerprint; a rerun skips
-stages whose marker matches, so a mid-run kill converges on rerun —
-content-addressed ids make outputs byte-stable across runs.
+writes a lineage marker containing the input-and-config fingerprint; a
+rerun skips stages whose marker matches, so a mid-run kill converges on
+rerun — content-addressed ids make outputs byte-stable across runs.
 
 Error semantics: rows with null conv_id / turn_idx / unparseable shape
 go to a quarantine table instead of killing the job — the distributed
@@ -23,6 +23,7 @@ but visible instead of silent.
 
 from __future__ import annotations
 
+import hashlib
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -34,17 +35,6 @@ from docs2kg_spark.io.sinks import TableStore
 from docs2kg_spark.operators.graph import conversation_metadata_kg, materialize_kg
 from docs2kg_spark.operators.linking import build_canonical_map
 from docs2kg_spark.operators.segments import segment_transcripts
-
-
-def input_fingerprint(transcripts: DataFrame) -> str:
-    """Order-insensitive content fingerprint of the input table — one agg
-    pass (xxhash64 per row, summed).  Stands in for Iceberg's snapshot id."""
-    row = transcripts.agg(
-        F.count("*").alias("n"),
-        # bit_xor: order-insensitive and overflow-free under ANSI mode
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h']}"
 
 
 INPUT_SCHEMA = {
@@ -65,6 +55,25 @@ def normalize_input(transcripts: DataFrame) -> DataFrame:
     return transcripts.select(
         *[F.col(c).cast(t).alias(c) for c, t in INPUT_SCHEMA.items() if c in transcripts.columns]
     )
+
+
+def input_fingerprint(transcripts: DataFrame, cfg: PipelineConfig) -> str:
+    """Resume key: an order-insensitive content fingerprint of the
+    normalized input plus a sha256 of the config.  Stands in for
+    Iceberg's snapshot id.
+
+    One agg pass: row count and the sum of one xxhash64 per row over
+    every contract column.  The sum runs in decimal(38,0), so it is exact
+    and cannot overflow under ANSI mode; unlike an xor, equal rows do not
+    cancel.  repr of the frozen config is stable across processes
+    (Python's hash() of a str is salted per process)."""
+    normalized = normalize_input(transcripts)
+    row = normalized.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*normalized.columns).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    cfg_hash = hashlib.sha256(repr(cfg).encode("utf-8")).hexdigest()
+    return f"{row['n']}:{row['h']}:{cfg_hash}"
 
 
 def split_quarantine(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -103,7 +112,7 @@ def run_pipeline(
     # markers are write-only, so skip the extra full input scan (a rerun
     # with resume=True recomputes the real fp, mismatches, and rebuilds —
     # safe in both directions)
-    fp = input_fingerprint(transcripts) if resume else "ephemeral"
+    fp = input_fingerprint(transcripts, cfg) if resume else "ephemeral"
     stage_times: dict[str, float] = {}
     # side jobs (quarantine / metadata / metrics / secondary table writes)
     # are independent of the critical path segments → extraction →
@@ -213,8 +222,8 @@ def run_pipeline(
             meta_future = None
 
         # fused extraction: mentions + triples in ONE Arrow pass, no shuffle
-        # (the per-segment pair generation of operators/relations.py is
-        # computed inside the UDF; see mentions.py::_triples_of)
+        # (the per-segment pair generation runs inside the UDF; see
+        # mentions.py::_triples_of)
         if resume and all(
             store.stage_complete(s, fp) and store.exists(s) for s in ("mentions", "triples")
         ):
@@ -223,7 +232,7 @@ def run_pipeline(
             triples = store.read("triples")
         else:
             t0 = time.monotonic()
-            from docs2kg_spark.operators.mentions import extract_fused
+            from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 
             enriched, _, _ = extract_fused(segments, spark, cfg)
             # checkpoint the UDF output itself: guarantees exactly ONE
@@ -233,17 +242,7 @@ def run_pipeline(
             store.write(enriched, "extraction")
             stage_times["x_extraction_write"] = time.monotonic() - t0
             store.write_marker("extraction", fp)
-            enriched_t = store.read("extraction")
-            mentions_df = enriched_t.select(
-                "conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m")
-            ).filter(F.col("m").isNotNull()).select(
-                "conv_id", "seg_id", "m.start", "m.end", "m.text", "m.label", "m.confidence", "m.method"
-            )
-            triples_df = enriched_t.select(
-                "conv_id", "seg_id", F.explode_outer("ext.triples").alias("t")
-            ).filter(F.col("t").isNotNull()).select(
-                "conv_id", "seg_id", "t.subj", "t.subj_label", "t.pred", "t.obj", "t.obj_label", "t.confidence"
-            )
+            mentions_df, triples_df = explode_extraction(store.read("extraction"))
             # the two explode-projections read the same checkpoint and are
             # independent → concurrent jobs
 

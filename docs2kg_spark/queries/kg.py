@@ -99,11 +99,11 @@ def q_kg_mentions(spark, sf_dir):
 
 @_pkg_patchable
 def q_kg_triples(spark, sf_dir):
-    from docs2kg_spark.operators.relations import cooccurrence_triples
+    from docs2kg_spark.operators.mentions import extract_fused
 
-    _, m = _kg_stack(spark, sf_dir)
+    segs, _ = _kg_stack(spark, sf_dir)
     return _kg_memo(
-        spark, sf_dir, "triples", lambda: cooccurrence_triples(m, spark)
+        spark, sf_dir, "triples", lambda: extract_fused(segs, spark)[2]
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.io.sinks import TableStore
-from docs2kg_spark.operators.mentions import extract_fused
+from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -308,23 +308,7 @@ def process_kg_batch(
 
     # ONE Arrow extraction pass, checkpointed, then two narrow projections
     enriched, _, _ = extract_fused(segs, spark, cfg)
-    enriched = enriched.localCheckpoint()
-    mentions = (
-        enriched.select("conv_id", "seg_id", F.explode_outer("ext.mentions").alias("m"))
-        .filter(F.col("m").isNotNull())
-        .select(
-            "conv_id", "seg_id", "m.start", "m.end", "m.text", "m.label",
-            "m.confidence", "m.method",
-        )
-    )
-    triples = (
-        enriched.select("conv_id", "seg_id", F.explode_outer("ext.triples").alias("t"))
-        .filter(F.col("t").isNotNull())
-        .select(
-            "conv_id", "seg_id", "t.subj", "t.subj_label", "t.pred", "t.obj",
-            "t.obj_label", "t.confidence",
-        )
-    )
+    mentions, triples = explode_extraction(enriched.localCheckpoint())
 
     m_obs, t_obs = Observation(f"inc_m_{batch_id}"), Observation(f"inc_t_{batch_id}")
     store.append_batch(segs, "segments", batch_id)

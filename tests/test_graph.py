@@ -6,8 +6,7 @@ from pyspark.sql import functions as F
 from docs2kg_spark.functions.labels import sanitize_label_col, sanitize_label_py
 from docs2kg_spark.operators.graph import layout_edges, materialize_kg, metadata_kg
 from docs2kg_spark.operators.linking import build_canonical_map
-from docs2kg_spark.operators.mentions import extract_mentions
-from docs2kg_spark.operators.relations import cooccurrence_triples
+from docs2kg_spark.operators.mentions import extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
 from docs2kg_spark.oracle.graph import layout_edges_oracle
 
@@ -72,8 +71,8 @@ def test_sanitize_label_col_matches_py(spark):
 
 def test_materialize_kg_invariants(spark, transcripts_df):
     segs = segment_transcripts(transcripts_df).cache()
-    m = extract_mentions(segs, spark).cache()
-    t = cooccurrence_triples(m, spark)
+    _, m, t = extract_fused(segs, spark)
+    m = m.cache()
     cmap, _ = build_canonical_map(m, spark)
     nodes, edges = materialize_kg(segs, m, t, cmap)
     nodes = nodes.cache()

@@ -4,7 +4,7 @@
 Above mentions._LARGE_VOCAB entries the matcher flips to
 vocabulary-size-independent structures (legacy token-scan dict probe +
 one Aho-Corasick presence pass for the LLM path) instead of the
-alternation regexes and per-surface substring scans that collapse at
+first-token alternation regex and per-surface substring scans that collapse at
 100k surfaces.  Two guarantees are pinned here:
 
 1. PARITY — the large-vocab route is bit-identical to the small-vocab
@@ -68,13 +68,13 @@ def test_large_vocab_route_parity(fuzz_texts, monkeypatch):
     gaz = cfg_mod.DEFAULT_GAZETTEER
     _clear_caches()
     small = _extract_all(gaz, fuzz_texts)
-    # verify the small route actually used the fast structures
-    assert m._INDEX_CACHE[hash(gaz)][1] is not None
+    # verify the small route actually used the fast matcher
+    assert m._INDEX_CACHE[hash(gaz)][1][0] is True
 
     _clear_caches()
     monkeypatch.setattr(m, "_LARGE_VOCAB", 1)
     large = _extract_all(gaz, fuzz_texts)
-    assert m._INDEX_CACHE[hash(gaz)][1] is None  # large route engaged
+    assert m._INDEX_CACHE[hash(gaz)][1][0] is False  # large route engaged
     assert m._LLM_CACHE[(hash(gaz), ENTITY_TYPES)][1] is not None  # AC built
     _clear_caches()
 
@@ -123,7 +123,7 @@ def test_100k_surface_throughput():
     llm = m._get_llm_entries(gaz, ENTITY_TYPES)
     build_s = time.monotonic() - t0
     assert build_s <= 60.0, f"100k-surface index build took {build_s:.1f}s"
-    assert index[1] is None and llm[1] is not None  # large route engaged
+    assert index[1][0] is False and llm[1] is not None  # large route engaged
 
     t0 = time.monotonic()
     results = [m._extract_one(t, llm, index, 3) for t in texts]

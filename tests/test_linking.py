@@ -19,10 +19,8 @@ def test_canonical_parity_with_oracle(spark, transcripts_df, oracle_result):
     assert got == set(oracle_result["canonical"].items())
 
 
-def _cc(spark, nodes, edges, max_rounds=20, driver_max_edges=200_000, algorithm="star"):
-    cfg = PipelineConfig(
-        cc_max_rounds=max_rounds, cc_driver_max_edges=driver_max_edges, cc_algorithm=algorithm
-    )
+def _cc(spark, nodes, edges, max_rounds=20, driver_max_edges=200_000):
+    cfg = PipelineConfig(cc_max_rounds=max_rounds, cc_driver_max_edges=driver_max_edges)
     n = spark.createDataFrame([(x,) for x in nodes], "node_id string")
     e = spark.createDataFrame(edges or [("_none_", "_none2_")], "a string, b string")
     if not edges:
@@ -32,12 +30,12 @@ def _cc(spark, nodes, edges, max_rounds=20, driver_max_edges=200_000, algorithm=
 
 
 def test_cc_chain(spark):
-    # chain a-b-c-d collapses to min — on ALL dispatch paths
-    # (driver_max_edges=0 forces the distributed algorithms)
-    for dme, alg in ((200_000, "star"), (0, "star"), (0, "hash_to_min")):
+    # chain a-b-c-d collapses to min — on both dispatch paths
+    # (driver_max_edges=0 forces the distributed star loop)
+    for dme in (200_000, 0):
         got = _cc(
             spark, ["a", "b", "c", "d"], [("a", "b"), ("b", "c"), ("c", "d")],
-            driver_max_edges=dme, algorithm=alg,
+            driver_max_edges=dme,
         )
         assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
 
@@ -60,9 +58,9 @@ def _uf_reference(nodes, edges):
 
 
 def test_cc_star_random_graph_parity(spark):
-    """large-star/small-star == hash-to-min == plain union-find on a
-    seeded random graph with chains, cliques, and singletons — both
-    distributed paths forced (driver_max_edges=0)."""
+    """large-star/small-star == plain union-find on a seeded random
+    graph with chains, cliques, and singletons — the distributed path
+    forced (driver_max_edges=0)."""
     import random
 
     rng = random.Random(42)
@@ -81,14 +79,8 @@ def test_cc_star_random_graph_parity(spark):
         edges.append((f"n{a:03d}", f"n{b:03d}"))
     rng.shuffle(edges)
     want = _uf_reference(nodes, edges)
-    got_star = _cc(spark, nodes, edges, driver_max_edges=0, algorithm="star")
-    # plain min-label propagation needs O(diameter) rounds — the 40-node
-    # chain has diameter 39, so give it headroom (star converges in ~6)
-    got_h2m = _cc(
-        spark, nodes, edges, driver_max_edges=0, algorithm="hash_to_min", max_rounds=60
-    )
+    got_star = _cc(spark, nodes, edges, driver_max_edges=0)
     assert got_star == want
-    assert got_h2m == want
 
 
 def test_cc_star(spark):
@@ -100,10 +92,10 @@ def test_cc_unconverged_warns(spark):
     """Hitting cc_max_rounds without a fixpoint must be loud, not silent."""
     import pytest as _pytest
 
-    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(9)]
-    nodes = [f"c{i:02d}" for i in range(10)]
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(30)]
+    nodes = [f"c{i:02d}" for i in range(31)]
     with _pytest.warns(UserWarning, match="cc_max_rounds"):
-        _cc(spark, nodes, chain, driver_max_edges=0, algorithm="hash_to_min", max_rounds=2)
+        _cc(spark, nodes, chain, driver_max_edges=0, max_rounds=1)
 
 
 def test_cc_two_components_and_singleton(spark):

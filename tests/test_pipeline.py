@@ -120,3 +120,55 @@ def test_ontology_persistence_round_trip(spark, tmp_path):
     # and a second identical run is a no-op (no rewrite churn)
     merged2, changed2 = persist_updated_ontology(store, mentions, base)
     assert not changed2 and merged2.entity_types == reloaded.entity_types
+
+
+# ---------------------------------------------------------------------------
+# resume key: covers every input column and the config
+# ---------------------------------------------------------------------------
+
+_STAGES = ("segments", "mentions", "triples", "canonical_map", "kg_nodes", "kg_edges")
+
+
+def _small_input(spark):
+    from docs2kg_spark.fixtures import transcripts_pandas
+
+    return spark.createDataFrame(transcripts_pandas(8, 6, seed=7))
+
+
+def test_resume_key_covers_config(spark, tmp_path):
+    """A rerun with a different config in the same workdir must rebuild,
+    not resume the old config's tables."""
+    from docs2kg_spark.config import DEFAULT_GAZETTEER, PipelineConfig
+
+    df = _small_input(spark)
+    wd = str(tmp_path / "kg")
+    run_pipeline(spark, df, wd)
+    small = PipelineConfig(gazetteer=DEFAULT_GAZETTEER[:5])
+    rerun = run_pipeline(spark, df, wd, small)
+    fresh = run_pipeline(spark, df, str(tmp_path / "fresh"), small)
+    assert rerun["stage_times"]["mentions"] > 0
+    assert {k: rerun[k].count() for k in _STAGES} == {k: fresh[k].count() for k in _STAGES}
+
+
+def test_resume_key_covers_role(spark, tmp_path):
+    """`role` is not in the old (conv_id, turn_idx, text) key: changing
+    only the roles must still rebuild the segments."""
+    df = _small_input(spark)
+    wd = str(tmp_path / "kg")
+    run_pipeline(spark, df, wd)
+    res = run_pipeline(spark, df.withColumn("role", F.lit("tool")), wd)
+    assert res["stage_times"]["segments"] > 0
+    assert {r.role for r in res["segments"].select("role").distinct().collect()} == {"tool"}
+
+
+def test_fingerprint_duplicate_rows_do_not_cancel(spark):
+    """{A, A} and {B, B} both xor to 0; the summed key tells them apart."""
+    from docs2kg_spark.config import PipelineConfig
+    from docs2kg_spark.plans.pipeline import input_fingerprint
+
+    ddl = "conv_id string, turn_idx int, role string, text string"
+    a = spark.createDataFrame([("c1", 0, "user", "alice")] * 2, ddl)
+    b = spark.createDataFrame([("c2", 1, "user", "bob")] * 2, ddl)
+    cfg = PipelineConfig()
+    assert input_fingerprint(a, cfg) != input_fingerprint(b, cfg)
+    assert input_fingerprint(a, cfg) == input_fingerprint(a.repartition(3), cfg)

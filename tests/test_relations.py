@@ -1,57 +1,27 @@
-from docs2kg_spark.operators.mentions import extract_mentions
-from docs2kg_spark.operators.relations import cooccurrence_triples
+from docs2kg_spark.operators.mentions import extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
 
 
 def test_triple_parity_with_oracle(spark, transcripts_df, oracle_result):
     segs = segment_transcripts(transcripts_df)
-    m = extract_mentions(segs, spark)
-    got = {
-        (r.seg_id, r.subj, r.pred, r.obj, r.confidence)
-        for r in cooccurrence_triples(m, spark).collect()
-    }
+    _, _, triples = extract_fused(segs, spark)
+    got = {(r.seg_id, r.subj, r.pred, r.obj, r.confidence) for r in triples.collect()}
     want = {
         (t["seg_id"], t["subj"], t["pred"], t["obj"], t["confidence"])
         for t in oracle_result["triples"]
     }
     assert got == want
-
-
-def test_fused_triples_equal_join_triples(spark, transcripts_df, oracle_result):
-    """the pipeline's fused (in-UDF) triple emission must match the
-    join-based operator AND the oracle exactly."""
-    from docs2kg_spark.operators.mentions import extract_fused
-
-    segs = segment_transcripts(transcripts_df)
-    _, m, t_fused = extract_fused(segs, spark)
-    got = {
-        (r.seg_id, r.subj, r.subj_label, r.pred, r.obj, r.obj_label, r.confidence)
-        for r in t_fused.collect()
-    }
-    t_join = cooccurrence_triples(extract_mentions(segs, spark), spark)
-    want = {
-        (r.seg_id, r.subj, r.subj_label, r.pred, r.obj, r.obj_label, r.confidence)
-        for r in t_join.collect()
-    }
-    assert got == want
-    want_oracle = {
-        (t["seg_id"], t["subj"], t["pred"], t["obj"], t["confidence"])
-        for t in oracle_result["triples"]
-    }
-    assert {(a, b, d, e, g) for a, b, c, d, e, f, g in got} == want_oracle
 
 
 def test_triples_sql_twin_duckdb(spark, transcripts_df):
-    """The join-based triple derivation has an exact ANSI-SQL twin —
+    """The fused triple emission has an exact ANSI-SQL twin —
     cross-checked with DuckDB over the same mention rows."""
     import duckdb
 
     segs = segment_transcripts(transcripts_df)
-    m = extract_mentions(segs, spark).cache()
-    got = {
-        (r.seg_id, r.subj, r.pred, r.obj, round(r.confidence, 9))
-        for r in cooccurrence_triples(m, spark).collect()
-    }
+    enriched, m, t = extract_fused(segs, spark)
+    enriched.cache()
+    got = {(r.seg_id, r.subj, r.pred, r.obj, round(r.confidence, 9)) for r in t.collect()}
 
     mpdf = m.toPandas()
     con = duckdb.connect()
@@ -81,23 +51,6 @@ def test_triples_sql_twin_duckdb(spark, transcripts_df):
     """
     want = {(r[0], r[1], r[2], r[3], round(r[4], 9)) for r in con.execute(sql).fetchall()}
     assert got == want
-
-
-def test_salted_self_join_parity(spark, transcripts_df):
-    # the (seg_id, _salt) salted shuffle must be output-identical to the
-    # plain seg_id self-join (functions/skew.py wiring, the n_salts
-    # argument)
-    segs = segment_transcripts(transcripts_df)
-    m = extract_mentions(segs, spark)
-    plain = {
-        (r.seg_id, r.subj, r.pred, r.obj, r.confidence)
-        for r in cooccurrence_triples(m, spark).collect()
-    }
-    salted = {
-        (r.seg_id, r.subj, r.pred, r.obj, r.confidence)
-        for r in cooccurrence_triples(m, spark, n_salts=4).collect()
-    }
-    assert salted == plain and len(plain) > 0
 
 
 # ---------------------------------------------------------------------------

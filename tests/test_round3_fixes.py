@@ -70,13 +70,6 @@ def test_extract_features_injected_decoder(spark):
         assert r.features == [float(r.n_bytes), 1.0]
 
 
-def test_cc_algorithm_validated(spark):
-    n = spark.createDataFrame([("a",), ("b",)], "node_id string")
-    e = spark.createDataFrame([("a", "b")], "a string, b string")
-    with pytest.raises(ValueError, match="cc_algorithm"):
-        connected_components(n, e, PipelineConfig(cc_algorithm="Star"))
-
-
 def test_cc_star_unconverged_is_still_a_function(spark):
     """Hitting cc_max_rounds mid-convergence may leave non-minimal
     labels (warned), but the returned map must still be one row per
@@ -88,7 +81,7 @@ def test_cc_star_unconverged_is_still_a_function(spark):
     nodes = [f"c{i:02d}" for i in range(31)]
     n = spark.createDataFrame([(x,) for x in nodes], "node_id string")
     e = spark.createDataFrame(chain, "a string, b string")
-    cfg = PipelineConfig(cc_max_rounds=1, cc_driver_max_edges=0, cc_algorithm="star")
+    cfg = PipelineConfig(cc_max_rounds=1, cc_driver_max_edges=0)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # non-convergence warning is expected
         out = connected_components(n, e, cfg).collect()

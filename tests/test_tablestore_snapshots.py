@@ -72,6 +72,28 @@ def test_expire_snapshots_prunes_history_keeps_current(spark, store):
         store.snapshot_read("t", 1)                 # expired id is gone
 
 
+def test_expire_commits_log_before_deleting_dirs(spark, store, monkeypatch):
+    """A crash while deleting expired dirs must leave the log already
+    pruned: an expired id reads as gone, not as a half-deleted dir."""
+    import shutil
+
+    for i in range(3):
+        store.snapshot_write(
+            spark.createDataFrame([(i, "x")], "k int, v string"), "t"
+        )
+
+    def crash(*_a, **_k):
+        raise OSError("crash mid-delete")
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(OSError):
+        store.expire_snapshots("t", keep_last=1)
+    monkeypatch.undo()
+    assert store.snapshot_ids("t") == [3]
+    with pytest.raises(ValueError):
+        store.snapshot_read("t", 1)
+
+
 def test_vlog_commit_is_atomic(spark, store, tmp_path):
     store.snapshot_write(spark.createDataFrame([(1, "a")], "k int, v string"), "t")
     # no torn .tmp left behind after a successful commit
