@@ -132,7 +132,11 @@ class PipelineConfig:
     # the mention table (it exists only where surfaces near-duplicate),
     # so small/medium graphs pay 1 job instead of rounds x checkpoints.
     # Above it, the large-star/small-star loop runs (the 10^12-turn
-    # path; force it everywhere with cc_driver_max_edges=0).
+    # path; force it everywhere with cc_driver_max_edges=0).  The same
+    # bound picks the route of graphq.k_hop and
+    # graphq.personalized_pagerank: an edge table at or under it is
+    # collected once and walked on the driver, a larger one (or a bound
+    # of 0) runs the per-hop / per-iteration DataFrame loop.
     cc_driver_max_edges: int = 200_000
     # When the distinct (text,label) surface vocabulary fits under this
     # bound, the WHOLE linking stage (MinHash -> LSH banding -> block cap

@@ -8,16 +8,25 @@ so a Docs2KG user can stay on the engine's own tables: degree stats,
 bounded-hop neighborhood expansion (Cypher's variable-length patterns),
 PageRank-style importance, and triangle participation.
 
-Scale design (every function is DataFrame-only, no Python in the loop):
+Scale design (DataFrame-only, no Python in the loop, except the
+driver route of k_hop and personalized_pagerank):
 - degrees: two partial+final hash aggregates + one full-outer equi-join
   on node id.  No skew beyond what the graph itself has; AQE splits hot
   nodes.
-- k_hop: frontier BFS — per hop one equi-join frontier⋈edges, one
-  distinct, one left-anti against visited; the frontier is
-  localCheckpoint'ed per hop so the plan stays flat (lineage would
-  otherwise double per hop).  A frontier that is small relative to the
-  edge table broadcasts automatically under AQE.  Worst case per hop is
-  one shuffle over the frontier's out-edges — never the whole graph.
+- k_hop and personalized_pagerank: an edge table of at most
+  PipelineConfig.cc_driver_max_edges rows (the bound that already picks
+  linking's driver union-find) is collected once through Arrow and
+  walked on the driver — 2 Spark jobs (edges, seeds) instead of one
+  localCheckpoint job plus shuffles per hop or iteration; the result
+  goes back through Arrow, which starts no job.  Larger tables take the
+  DataFrame loops below, with the same answers (parity-tested).
+- k_hop (distributed): frontier BFS — per hop one equi-join
+  frontier⋈edges, one distinct, one left-anti against visited; the
+  frontier is localCheckpoint'ed per hop so the plan stays flat
+  (lineage would otherwise double per hop).  A frontier that is small
+  relative to the edge table broadcasts automatically under AQE.  Worst
+  case per hop is one shuffle over the frontier's out-edges — never the
+  whole graph.
 - pagerank: the GraphX convention (pr = (1-d) + d·Σ pr(u)/outdeg(u),
   dangling mass not redistributed — deterministic and join-local, no
   per-iteration driver aggregation).  Each iteration is one equi-join
@@ -34,8 +43,15 @@ Scale design (every function is DataFrame-only, no Python in the loop):
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from docs2kg_spark.config import PipelineConfig
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -76,28 +92,82 @@ def undirect(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     return fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
+def _driver_edge_list(edges: DataFrame, cfg: PipelineConfig | None) -> list | None:
+    """(src, dst) pairs of ``edges`` when it has at most
+    cfg.cc_driver_max_edges rows — one bounded Arrow collect — else None
+    (also for a bound <= 0, without touching the table).  The driver
+    routes take node ids as non-null, as kg_edges writes them: a null
+    endpoint does not get the distributed joins' null semantics."""
+    cap = (cfg or PipelineConfig()).cc_driver_max_edges
+    if cap <= 0:
+        return None
+    t = edges.select("src", "dst").limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        return None
+    return list(zip(t.column("src").to_pylist(), t.column("dst").to_pylist()))
+
+
+def _seed_ids(seeds: DataFrame) -> list:
+    return seeds.select("node").toArrow().column("node").to_pylist()
+
+
+def _node_frame(edges: DataFrame, node_type, col: str, col_type, values: dict) -> DataFrame:
+    """A driver-side {node: value} result as a (node, col) DataFrame
+    through Arrow: no Spark job, where a Python-list createDataFrame runs
+    one through a Python worker."""
+    schema = StructType([StructField("node", node_type), StructField(col, col_type, False)])
+    table = pa.table({"node": list(values), col: list(values.values())}, schema=to_arrow_schema(schema))
+    return edges.sparkSession.createDataFrame(table, schema)
+
+
+def _bfs_hops(pairs: list, seeds: list, k: int) -> dict:
+    """node -> min hops from any seed along src → dst, up to k."""
+    adj: dict = defaultdict(list)
+    for u, v in pairs:
+        adj[u].append(v)
+    hops = dict.fromkeys(seeds, 0)
+    frontier = list(hops)
+    for h in range(1, k + 1):
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in hops:
+                    hops[v] = h
+                    nxt.append(v)
+        if not nxt:
+            break
+        frontier = nxt
+    return hops
+
+
 def k_hop(
     edges: DataFrame,
     seeds: DataFrame,
     k: int,
     broadcast_below: int = 2_000_000,
+    cfg: PipelineConfig | None = None,
 ) -> DataFrame:
     """Minimum-hop BFS from ``seeds`` (a DataFrame with column `node`)
     following `src → dst`, bounded at ``k`` hops.
-    → (node, hops) with hops = min #edges from any seed (seeds at 0).
+    → (node, hops) with hops = min #edges from any seed (seeds at 0,
+    including seeds that no edge touches).
 
     The Cypher analog is `MATCH (s)-[*..k]->(n)` with shortest-path
     semantics.  Frontier-based: each hop touches only the frontier's
     out-edges; early-exits when the frontier drains.
 
-    Exactly ONE job per hop: only the new frontier is checkpointed (the
-    round-2 form re-materialized the whole visited set each hop —
-    O(k·|V|) checkpoint writes) and its size rides that same job as an
-    Observation (no separate isEmpty() job).  The anti-join's right side
-    is the lazy union of the prior frontier checkpoints — the same rows
-    the old visited table held (frontiers are disjoint by construction),
-    read from the already-materialized blocks, never rewritten.  The
-    returned DataFrame is the lazy union of all frontiers.
+    Driver route: an edge table of at most cfg.cc_driver_max_edges rows
+    (`cfg=None` takes the PipelineConfig default; 0 forces the
+    distributed route) is collected once and walked by a plain-Python
+    BFS — 2 jobs in all (edges, seeds), whatever k is.
+
+    Distributed route, ONE job per hop: only the new frontier is
+    checkpointed and its size rides that same job as an Observation (no
+    separate isEmpty() job).  The anti-join's right side is the lazy
+    union of the prior frontier checkpoints (frontiers are disjoint by
+    construction), read from the already-materialized blocks, never
+    rewritten.  The returned DataFrame is the lazy union of all
+    frontiers.
 
     Frontier counts are KNOWN (the Observation), so while frontier and
     visited stay under ``broadcast_below`` rows the hop join and the
@@ -107,6 +177,11 @@ def k_hop(
     that outgrows the bound falls back to the shuffle join — the right
     plan when the frontier is a large fraction of a 100 TB graph."""
     from functools import reduce
+
+    pairs = _driver_edge_list(edges, cfg)
+    if pairs is not None:
+        hops = _bfs_hops(pairs, _seed_ids(seeds), k)
+        return _node_frame(edges, seeds.schema["node"].dataType, "hops", IntegerType(), hops)
 
     first = seeds.select("node").distinct().withColumn("hops", F.lit(0)).localCheckpoint()
     n_seen = first.count()  # blocks already materialized — metadata-cheap
@@ -162,19 +237,55 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
     return ranks
 
 
+def _ppr_ranks(pairs: list, seeds: list, iters: int, damping: float) -> dict:
+    """The personalized_pagerank recurrence over (src, dst) pairs in
+    plain Python; parallel edges and self-loops count, as in the joins."""
+    base = dict.fromkeys((n for pair in pairs for n in pair), 0.0)
+    for s in seeds:
+        if s in base:
+            base[s] = 1.0
+    targets: dict = defaultdict(list)  # one entry per edge: len = outdeg
+    for u, v in pairs:
+        targets[u].append(v)
+    pr = dict(base)
+    for _ in range(iters):
+        acc: dict = defaultdict(float)
+        for u, vs in targets.items():
+            c = pr[u] / len(vs)
+            for v in vs:
+                acc[v] += c
+        pr = {n: (1.0 - damping) * b + damping * acc.get(n, 0.0) for n, b in base.items()}
+    return pr
+
+
 def personalized_pagerank(
-    edges: DataFrame, seeds: DataFrame, iters: int = 5, damping: float = 0.85
+    edges: DataFrame,
+    seeds: DataFrame,
+    iters: int = 5,
+    damping: float = 0.85,
+    cfg: PipelineConfig | None = None,
 ) -> DataFrame:
     """Fixed-iteration personalized PageRank: teleport mass restarts
     ONLY at the seed set (Jeh & Widom, WWW'03 / the GraphX convention
     restricted to S):  pr⁰(v) = [v∈S];
     prⁱ(v) = (1−d)·[v∈S] + d · Σ_{u→v} prⁱ⁻¹(u)/outdeg(u).
-    → (node, pr).  seeds: one `node` column — seed sets are small by
-    definition, so the membership join is broadcast.
+    → (node, pr) over the edge endpoints (a seed no edge touches gets no
+    row); dangling mass is dropped.  seeds: one `node` column.
 
-    Scale shape mirrors pagerank (the cited Cypher-analog read): edge
-    shares pre-divided once and localCheckpointed, one equi-join + one
-    sum agg per iteration, node-sized frames only."""
+    Driver route: an edge table of at most cfg.cc_driver_max_edges rows
+    (`cfg=None` takes the PipelineConfig default; 0 forces the
+    distributed route) is collected once and the recurrence runs in
+    plain Python — 2 jobs in all (edges, seeds), whatever iters is.
+
+    Distributed route, the shape of pagerank (the cited Cypher-analog
+    read): seed sets are small by definition, so the membership join is
+    broadcast; edge shares are pre-divided once and localCheckpointed;
+    one equi-join + one sum agg per iteration, node-sized frames only."""
+    pairs = _driver_edge_list(edges, cfg)
+    if pairs is not None:
+        pr = _ppr_ranks(pairs, _seed_ids(seeds), iters, damping)
+        return _node_frame(edges, edges.schema["src"].dataType, "pr", DoubleType(), pr)
+
     e = edges.select("src", "dst")
     seed_marked = seeds.select(F.col("node"), F.lit(1.0).alias("is_seed")).distinct()
     nodes = (
@@ -382,7 +493,6 @@ def weakly_connected(
     cfg.cc_driver_max_edges, the alternating large-star/small-star
     O(log²n)-round loop above it — both min-id-exact, so the recursive
     label-propagation SQL twin applies regardless of which path ran."""
-    from docs2kg_spark.config import PipelineConfig
     from docs2kg_spark.operators.linking import connected_components
 
     cfg = cfg or PipelineConfig()

@@ -224,17 +224,127 @@ def test_kcore_cycle_keeps_cycle_drops_pendant(spark):
 def test_k_hop_broadcast_and_shuffle_paths_agree(spark):
     """broadcast_below=0 forces the shuffle-join fallback; the default
     broadcasts small frontiers — both must give the identical min-hop
-    set (the knob changes the physical plan only)."""
+    set (the knob changes the physical plan only).  cc_driver_max_edges=0
+    keeps both calls on the distributed route."""
+    from docs2kg_spark.config import PipelineConfig
+
+    distributed = PipelineConfig(cc_driver_max_edges=0)
     e = _edges(
         spark,
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("b", "e"), ("x", "y")],
     )
     seeds = spark.createDataFrame([("a",)], "node string")
-    fast = {(r["node"], r["hops"]) for r in k_hop(e, seeds, k=4).collect()}
+    fast = {(r["node"], r["hops"]) for r in k_hop(e, seeds, k=4, cfg=distributed).collect()}
     slow = {
         (r["node"], r["hops"])
-        for r in k_hop(e, seeds, k=4, broadcast_below=0).collect()
+        for r in k_hop(e, seeds, k=4, broadcast_below=0, cfg=distributed).collect()
     }
     assert fast == slow
     # a=0, b=1, c=2, e=2 (via b->e), d=3; x/y unreachable
     assert fast == {("a", 0), ("b", 1), ("c", 2), ("e", 2), ("d", 3)}
+
+
+# ---------------------------------------------------------------------------
+# k_hop / personalized_pagerank: driver route vs distributed route
+# ---------------------------------------------------------------------------
+
+
+def _parity_graph():
+    """Seeded random digraph with parallel edges, self-loops and
+    dangling nodes (in-edges only)."""
+    import random
+
+    rng = random.Random(11)
+    nodes = [f"n{i:02d}" for i in range(30)]
+    pairs = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(70)]
+    pairs += pairs[:6]  # parallel edges
+    pairs += [("n03", "n03"), ("n17", "n17"), ("n17", "n17")]  # self-loops
+    pairs += [(rng.choice(nodes), f"sink{i}") for i in range(4)]  # dangling
+    return pairs
+
+
+# duplicate seed, and one seed no edge touches
+_PARITY_SEEDS = ["n00", "n00", "n05", "absent"]
+
+
+def _ppr_reference(pairs, seeds, iters, damping):
+    nodes = {x for p in pairs for x in p}
+    base = {n: 1.0 if n in seeds else 0.0 for n in nodes}
+    out = {}
+    for s, _ in pairs:
+        out[s] = out.get(s, 0) + 1
+    pr = dict(base)
+    for _ in range(iters):
+        contrib = {n: 0.0 for n in nodes}
+        for s, d in pairs:
+            contrib[d] += pr[s] / out[s]
+        pr = {n: (1 - damping) * base[n] + damping * contrib[n] for n in nodes}
+    return pr
+
+
+def test_k_hop_driver_and_distributed_routes_agree(spark):
+    from docs2kg_spark.config import PipelineConfig
+    from docs2kg_spark.operators.graphq import k_hop
+
+    pairs = _parity_graph()
+    e = _edges(spark, pairs).repartition(3)
+    seeds = spark.createDataFrame([(s,) for s in _PARITY_SEEDS], "node string")
+    # k far beyond the graph's depth: the BFS has to stop on an empty frontier
+    driver = k_hop(e, seeds, k=40, cfg=PipelineConfig())
+    dist = k_hop(e, seeds, k=40, cfg=PipelineConfig(cc_driver_max_edges=0))
+    assert driver.schema == dist.schema
+    got = [(r["node"], r["hops"]) for r in driver.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == {(r["node"], r["hops"]) for r in dist.collect()}
+    hops = dict(got)
+    assert hops["n00"] == hops["n05"] == hops["absent"] == 0
+    assert max(hops.values()) >= 3
+
+
+def test_ppr_driver_and_distributed_routes_agree(spark):
+    from docs2kg_spark.config import PipelineConfig
+    from docs2kg_spark.operators.graphq import personalized_pagerank
+
+    pairs = _parity_graph()
+    e = _edges(spark, pairs).repartition(3)
+    seeds = spark.createDataFrame([(s,) for s in _PARITY_SEEDS], "node string")
+    driver = personalized_pagerank(e, seeds, iters=6, cfg=PipelineConfig())
+    dist = personalized_pagerank(e, seeds, iters=6, cfg=PipelineConfig(cc_driver_max_edges=0))
+    assert driver.schema == dist.schema
+    a = {r["node"]: r["pr"] for r in driver.collect()}
+    b = {r["node"]: r["pr"] for r in dist.collect()}
+    ref = _ppr_reference(pairs, set(_PARITY_SEEDS), 6, 0.85)
+    assert set(a) == set(b) == set(ref)
+    assert "absent" not in a
+    for n in ref:
+        assert a[n] == pytest.approx(b[n], abs=1e-12)
+        assert a[n] == pytest.approx(ref[n], abs=1e-12)
+
+
+def test_graph_read_route_boundary_is_cc_driver_max_edges(spark, monkeypatch):
+    """At cc_driver_max_edges == n_edges the driver kernels run; one
+    edge over the bound, the distributed loops do."""
+    from docs2kg_spark.config import PipelineConfig
+    from docs2kg_spark.operators import graphq
+
+    calls = []
+    for name in ("_bfs_hops", "_ppr_ranks"):
+        kernel = getattr(graphq, name)
+        monkeypatch.setattr(
+            graphq, name, lambda *a, _k=kernel, _n=name: calls.append(_n) or _k(*a)
+        )
+    pairs = _parity_graph()
+    n = len(pairs)
+    e = _edges(spark, pairs)
+    seeds = spark.createDataFrame([("n00",)], "node string")
+    results = {}
+    for cap in (n, n - 1):
+        cfg = PipelineConfig(cc_driver_max_edges=cap)
+        calls.clear()
+        hops = {tuple(r) for r in graphq.k_hop(e, seeds, k=3, cfg=cfg).collect()}
+        pr = {r["node"]: r["pr"] for r in graphq.personalized_pagerank(e, seeds, cfg=cfg).collect()}
+        results[cap] = (hops, pr, list(calls))
+    assert results[n][2] == ["_bfs_hops", "_ppr_ranks"]
+    assert results[n - 1][2] == []
+    assert results[n][0] == results[n - 1][0]
+    assert results[n][1] == pytest.approx(results[n - 1][1], abs=1e-12)
