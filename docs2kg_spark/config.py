@@ -136,7 +136,11 @@ class PipelineConfig:
     # bound picks the route of graphq.k_hop and
     # graphq.personalized_pagerank: an edge table at or under it is
     # collected once and walked on the driver, a larger one (or a bound
-    # of 0) runs the per-hop / per-iteration DataFrame loop.
+    # of 0) runs the per-hop / per-iteration DataFrame loop.  One field,
+    # two decisions: a bound of 0 forces star CC AND the distributed
+    # graph reads.  Measured for the reads (4 vCPUs, synthetic
+    # Zipf-target graphs of 50k-800k edges), the driver route stayed
+    # faster up to 800k, so 200k sits below both reads' crossover.
     cc_driver_max_edges: int = 200_000
     # When the distinct (text,label) surface vocabulary fits under this
     # bound, the WHOLE linking stage (MinHash -> LSH banding -> block cap

@@ -4,6 +4,7 @@ NumPy-reference results on crafted graphs."""
 import pytest
 from pyspark.sql import functions as F
 
+from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.operators.graphq import (
     degree_histogram,
     degrees,
@@ -38,19 +39,25 @@ def test_undirect_dedups_and_symmetrizes(spark):
     assert got == {("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")}
 
 
+# both k_hop routes: the default bound keeps these small graphs on the
+# driver, a bound of 0 forces the distributed loop
+_ROUTES = (None, PipelineConfig(cc_driver_max_edges=0))
+
+
 def test_k_hop_min_hops_and_early_exit(spark):
     # chain a->b->c->d plus shortcut a->c: c is 1 hop (min), d is 2
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c")])
     seeds = spark.createDataFrame([("a",)], "node string")
-    got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=10).collect()}
-    assert got == {"a": 0, "b": 1, "c": 1, "d": 2}
-    # bounded at k=1
-    got1 = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=1).collect()}
-    assert got1 == {"a": 0, "b": 1, "c": 1}
-    # two seeds, min across seeds
     seeds2 = spark.createDataFrame([("a",), ("d",)], "node string")
-    got2 = {r["node"]: r["hops"] for r in k_hop(e, seeds2, k=3).collect()}
-    assert got2 == {"a": 0, "d": 0, "b": 1, "c": 1}
+    for cfg in _ROUTES:
+        got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=10, cfg=cfg).collect()}
+        assert got == {"a": 0, "b": 1, "c": 1, "d": 2}
+        # bounded at k=1
+        got1 = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=1, cfg=cfg).collect()}
+        assert got1 == {"a": 0, "b": 1, "c": 1}
+        # two seeds, min across seeds
+        got2 = {r["node"]: r["hops"] for r in k_hop(e, seeds2, k=3, cfg=cfg).collect()}
+        assert got2 == {"a": 0, "d": 0, "b": 1, "c": 1}
 
 
 def test_pagerank_matches_numpy_reference(spark):
@@ -105,8 +112,9 @@ def test_k_hop_undirected_bipartite(spark):
     # undirected closure lets BFS bounce back: s1 -> p1 -> s2
     e = undirect(_edges(spark, [("s1", "p1"), ("s2", "p1")]))
     seeds = spark.createDataFrame([("s1",)], "node string")
-    got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=2).collect()}
-    assert got == {"s1": 0, "p1": 1, "s2": 2}
+    for cfg in _ROUTES:
+        got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=2, cfg=cfg).collect()}
+        assert got == {"s1": 0, "p1": 1, "s2": 2}
 
 
 # ---------------------------------------------------------------------------
@@ -226,8 +234,6 @@ def test_k_hop_broadcast_and_shuffle_paths_agree(spark):
     broadcasts small frontiers — both must give the identical min-hop
     set (the knob changes the physical plan only).  cc_driver_max_edges=0
     keeps both calls on the distributed route."""
-    from docs2kg_spark.config import PipelineConfig
-
     distributed = PipelineConfig(cc_driver_max_edges=0)
     e = _edges(
         spark,
@@ -283,9 +289,6 @@ def _ppr_reference(pairs, seeds, iters, damping):
 
 
 def test_k_hop_driver_and_distributed_routes_agree(spark):
-    from docs2kg_spark.config import PipelineConfig
-    from docs2kg_spark.operators.graphq import k_hop
-
     pairs = _parity_graph()
     e = _edges(spark, pairs).repartition(3)
     seeds = spark.createDataFrame([(s,) for s in _PARITY_SEEDS], "node string")
@@ -302,7 +305,6 @@ def test_k_hop_driver_and_distributed_routes_agree(spark):
 
 
 def test_ppr_driver_and_distributed_routes_agree(spark):
-    from docs2kg_spark.config import PipelineConfig
     from docs2kg_spark.operators.graphq import personalized_pagerank
 
     pairs = _parity_graph()
@@ -324,7 +326,6 @@ def test_ppr_driver_and_distributed_routes_agree(spark):
 def test_graph_read_route_boundary_is_cc_driver_max_edges(spark, monkeypatch):
     """At cc_driver_max_edges == n_edges the driver kernels run; one
     edge over the bound, the distributed loops do."""
-    from docs2kg_spark.config import PipelineConfig
     from docs2kg_spark.operators import graphq
 
     calls = []
