@@ -8,12 +8,14 @@ transcripts ─ quarantine split
   → canonical_map   (MinHash-LSH + CC fixpoint; checkpoint)
   → kg_nodes/edges  (joins through canonical_map; final tables)
   → metadata_kg     (conversation-level value nodes + HAS_* edges)
-  → metrics/_lineage (per-partition counts + stage wall-times)
+  → metrics         (per-partition counts, stage wall-times, LSH block stats)
 
 Resume semantics (north_rule "resumable from checkpoint"): every stage
-writes a lineage marker containing the input-and-config fingerprint; a
-rerun skips stages whose marker matches, so a mid-run kill converges on
-rerun — content-addressed ids make outputs byte-stable across runs.
+table is committed through TableStore's snapshot log under the
+input-and-config fingerprint as its key; a rerun skips stages whose
+committed key matches, so a mid-run kill converges on rerun — a crash
+leaves each table at its old or its new version, and content-addressed
+ids make outputs byte-stable across runs.
 
 Error semantics: rows with null conv_id / turn_idx / unparseable shape
 go to a quarantine table instead of killing the job — the distributed
@@ -37,6 +39,9 @@ from docs2kg_spark.operators.linking import build_canonical_map
 from docs2kg_spark.operators.segments import segment_transcripts
 
 
+# the transcript contract (BASELINE.json::input_hint): normalize_input,
+# the quarantine table, the stream's readStream schema and the JSONL
+# parse schema all derive from this one constant
 INPUT_SCHEMA = {
     "conv_id": "string",
     "turn_idx": "int",
@@ -45,6 +50,7 @@ INPUT_SCHEMA = {
     "tool": "string",
     "ts": "timestamp",
 }
+INPUT_DDL = ", ".join(f"{c} {t}" for c, t in INPUT_SCHEMA.items())
 
 
 def normalize_input(transcripts: DataFrame) -> DataFrame:
@@ -108,11 +114,16 @@ def run_pipeline(
 ) -> dict:
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)
-    # the fingerprint exists to key resume markers; with resume=False the
-    # markers are write-only, so skip the extra full input scan (a rerun
-    # with resume=True recomputes the real fp, mismatches, and rebuilds —
-    # safe in both directions)
+    # the fingerprint exists to key resume; with resume=False the keys are
+    # write-only, so skip the extra full input scan (a rerun with
+    # resume=True recomputes the real fp, mismatches, and rebuilds — safe
+    # in both directions)
     fp = input_fingerprint(transcripts, cfg) if resume else "ephemeral"
+
+    def current(*names: str) -> bool:
+        """The resume check: every table is committed under this run's key."""
+        return resume and all(store.committed(n, fp) for n in names)
+
     stage_times: dict[str, float] = {}
     # side jobs (quarantine / metadata / metrics / secondary table writes)
     # are independent of the critical path segments → extraction →
@@ -124,19 +135,25 @@ def run_pipeline(
     side_futures: list = []
 
     def submit_side(fn, *args):
-        side_futures.append(side.submit(fn, *args))
+        f = side.submit(fn, *args)
+        side_futures.append(f)
+        return f
 
     meta_future = None
+    block_stats_future = None
 
-    def run_stage(name: str, build, partition_by: list[str] | None = None) -> DataFrame:
-        """Build + persist one stage unless its checkpoint is current."""
-        if resume and store.stage_complete(name, fp) and store.exists(name):
+    def _timed_write(df: DataFrame, name: str) -> float:
+        t0 = time.monotonic()
+        store.write(df, name, key=fp)
+        return time.monotonic() - t0
+
+    def run_stage(name: str, build) -> DataFrame:
+        """Build + commit one stage unless it is current."""
+        if current(name):
             stage_times[name] = 0.0
             return store.read(name)
         t0 = time.monotonic()
-        df = build()
-        store.write(df, name, partition_by)
-        store.write_marker(name, fp)
+        store.write(build(), name, key=fp)
         stage_times[name] = time.monotonic() - t0
         return store.read(name)
 
@@ -155,7 +172,7 @@ def run_pipeline(
         # old always-on side write re-scanned the full input every run.
         normalized = normalize_input(transcripts)
         bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-        seg_fresh = not (resume and store.stage_complete("segments", fp) and store.exists("segments"))
+        seg_fresh = not current("segments")
         q_obs = Observation("quarantine_probe") if seg_fresh else None
         src = normalized.observe(q_obs, F.sum(bad_cond.cast("long")).alias("n_bad")) if q_obs else normalized
         good = src.filter(~bad_cond)
@@ -178,22 +195,20 @@ def run_pipeline(
         if q_obs is not None:
             # segments just materialized → the observation is bound
             if int(q_obs.get["n_bad"] or 0) > 0:
-                submit_side(lambda: store.write(quarantined, "quarantine"))
+                submit_side(lambda: store.write(quarantined, "quarantine", key=fp))
             else:
-                store.write_rows([], quarantine_ddl, "quarantine")
-        elif not store.exists("quarantine"):
+                store.write_rows([], quarantine_ddl, "quarantine", key=fp)
+        elif not current("quarantine"):
             # segments resumed but quarantine missing (partial workdir)
-            submit_side(lambda: store.write(quarantined, "quarantine"))
+            submit_side(lambda: store.write(quarantined, "quarantine", key=fp))
 
         # metadata KG depends only on the raw turns — overlap it with the
         # whole extraction/linking critical path
         def _meta_branch():
             t0 = time.monotonic()
             n, e = conversation_metadata_kg(good)
-            store.write(n, "metadata_nodes")
-            store.write(e, "metadata_edges")
-            store.write_marker("metadata_nodes", fp)
-            store.write_marker("metadata_edges", fp)
+            store.write(n, "metadata_nodes", key=fp)
+            store.write(e, "metadata_edges", key=fp)
             stage_times["metadata_nodes"] = time.monotonic() - t0
 
         # Overlapping the metadata branch with the extraction critical path
@@ -212,7 +227,7 @@ def run_pipeline(
             not spark.sparkContext.master.startswith("local")
             or spark.sparkContext.defaultParallelism <= 8
         )
-        if resume and store.stage_complete("metadata_nodes", fp) and store.exists("metadata_nodes"):
+        if current("metadata_nodes", "metadata_edges"):
             stage_times["metadata_nodes"] = 0.0
             meta_future = None
         elif overlap_meta:
@@ -224,9 +239,7 @@ def run_pipeline(
         # fused extraction: mentions + triples in ONE Arrow pass, no shuffle
         # (the per-segment pair generation runs inside the UDF; see
         # mentions.py::_triples_of)
-        if resume and all(
-            store.stage_complete(s, fp) and store.exists(s) for s in ("mentions", "triples")
-        ):
+        if current("mentions", "triples"):
             stage_times["mentions"] = stage_times["triples"] = 0.0
             mentions = store.read("mentions")
             triples = store.read("triples")
@@ -237,27 +250,17 @@ def run_pipeline(
             enriched, _, _ = extract_fused(segments, spark, cfg)
             # checkpoint the UDF output itself: guarantees exactly ONE
             # extraction pass (a .persist() can evict under memory pressure
-            # and silently re-run the UDF) and adds a resume point at the
-            # most expensive stage
-            store.write(enriched, "extraction")
+            # and silently re-run the UDF)
+            store.write(enriched, "extraction", key=fp)
             stage_times["x_extraction_write"] = time.monotonic() - t0
-            store.write_marker("extraction", fp)
             mentions_df, triples_df = explode_extraction(store.read("extraction"))
             # the two explode-projections read the same checkpoint and are
             # independent → concurrent jobs
-
-            def _timed_write(df, name):
-                s = time.monotonic()
-                store.write(df, name)
-                return time.monotonic() - s
-
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fm = pool.submit(_timed_write, mentions_df, "mentions")
                 ft = pool.submit(_timed_write, triples_df, "triples")
                 stage_times["x_mentions_write"] = fm.result()
                 stage_times["triples"] = ft.result()
-            store.write_marker("mentions", fp)
-            store.write_marker("triples", fp)
             stage_times["mentions"] = time.monotonic() - t0
             mentions = store.read("mentions")
             triples = store.read("triples")
@@ -271,20 +274,17 @@ def run_pipeline(
         submit_side(lambda: persist_updated_ontology(store, mentions, cfg.ontology))
 
         def _canonical():
+            nonlocal block_stats_future
             cmap, block_stats = build_canonical_map(mentions, spark, cfg)
-            # the stats collect is lineage bookkeeping, not a canonical_map
-            # dependency — run it off the critical path (for the small-vocab
-            # driver fast path it is a local relation, not even a job)
-            submit_side(
-                lambda: store.write_marker(
-                    "canonical_block_stats", fp, extra=block_stats.collect()[0].asDict()
-                )
-            )
+            # the stats collect feeds the metrics table, not canonical_map
+            # — run it off the critical path (for the small-vocab driver
+            # fast path it is a local relation, not even a job)
+            block_stats_future = submit_side(lambda: block_stats.collect()[0].asDict())
             return cmap
 
         canonical_map = run_stage("canonical_map", _canonical)
 
-        if resume and store.stage_complete("kg_nodes", fp) and store.exists("kg_nodes"):
+        if current("kg_nodes", "kg_edges"):
             stage_times["kg_nodes"] = 0.0
         else:
             t0 = time.monotonic()
@@ -292,19 +292,12 @@ def run_pipeline(
             nodes_df, edges_df = materialize_kg(
                 segments, mentions, triples, canonical_map, layout_schema=schema
             )
-            def _timed_store_write(df, name):
-                s = time.monotonic()
-                store.write(df, name)
-                return time.monotonic() - s
-
             # node and edge tables share inputs but not outputs → concurrent
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fn = pool.submit(_timed_store_write, nodes_df, "kg_nodes")
-                fe = pool.submit(_timed_store_write, edges_df, "kg_edges")
+                fn = pool.submit(_timed_write, nodes_df, "kg_nodes")
+                fe = pool.submit(_timed_write, edges_df, "kg_edges")
                 stage_times["x_kg_nodes_write"] = fn.result()
                 stage_times["x_kg_edges_write"] = fe.result()
-            store.write_marker("kg_nodes", fp)
-            store.write_marker("kg_edges", fp)
             stage_times["kg_nodes"] = time.monotonic() - t0
         kg_nodes = store.read("kg_nodes")
         kg_edges = store.read("kg_edges")
@@ -317,14 +310,22 @@ def run_pipeline(
         # drain side jobs (quarantine, ontology, block stats), then assemble
         # the combined metrics table driver-side: per-partition rows come
         # from the parquet footers of each stage table (no re-scan jobs),
-        # wall times from the stage_times dict — the whole metrics table is
-        # a driver-side metadata write, zero Spark jobs
+        # wall times from the stage_times dict, LSH block stats from their
+        # side job — the whole metrics table is a driver-side metadata
+        # write, zero Spark jobs
         for f in side_futures:
             f.result()
         side.shutdown(wait=True)
         metric_rows: list[tuple] = [
             (-1, int(v * 1000), f"{k}__wall_ms") for k, v in stage_times.items()
         ]
+        if block_stats_future is not None:
+            # LSH blocks built, capped, and the largest, for the run that
+            # rebuilt canonical_map
+            metric_rows.extend(
+                (-1, int(v or 0), f"canonical_map__{k}")
+                for k, v in block_stats_future.result().items()
+            )
         for name in (
             "segments",
             "mentions",

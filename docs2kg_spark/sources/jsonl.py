@@ -23,23 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from docs2kg_spark.plans.pipeline import INPUT_DDL, INPUT_SCHEMA
 
 _CORRUPT = "_corrupt_record"
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField(_CORRUPT, T.StringType()),
-    ]
-)
-
-_FIELDS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
 def read_transcripts_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -51,12 +38,12 @@ def read_transcripts_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, D
         F.col("value"),
         F.from_json(
             "value",
-            TRANSCRIPT_SCHEMA,
+            f"{INPUT_DDL}, {_CORRUPT} string",
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT},
         ).alias("r"),
     )
     bad = F.col("r").isNull() | F.col(f"r.{_CORRUPT}").isNotNull()
-    good = parsed.filter(~bad).select(*[F.col(f"r.{f}").alias(f) for f in _FIELDS])
+    good = parsed.filter(~bad).select(*[F.col(f"r.{f}").alias(f) for f in INPUT_SCHEMA])
     corrupt = parsed.filter(bad).select(
         F.col("value").alias("raw_line"),
         F.lit("malformed json line").alias("quarantine_reason"),

@@ -59,7 +59,7 @@ def _dedup_batch(store: TableStore, batch_df: DataFrame, batch_id: int) -> dict:
         fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id")),
         ["fp", "doc_id"],
     )
-    if store.has_data("fingerprints"):
+    if store.exists("fingerprints"):
         seen = store.read("fingerprints").select("fp")
     else:
         seen = spark.createDataFrame([], _FP_DDL).select("fp")
@@ -118,8 +118,7 @@ def _cms_batch(store: TableStore, batch_df: DataFrame, batch_id: int,
 
 def cms_merged(store: TableStore) -> DataFrame:
     """The up-to-date sketch: Σ cells over every batch delta — a
-    constant d×w result however many batches landed (compact the
-    delta directory with TableStore.compact when batch count grows)."""
+    constant d×w result however many batches landed."""
     return (
         store.read("cms_deltas")
         .groupBy("seed", "bucket")

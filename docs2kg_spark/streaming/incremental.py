@@ -21,71 +21,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.io.sinks import TableStore
 from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
-
-
-def incremental_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: PipelineConfig | None = None,
-    available_now: bool = True,
-):
-    """readStream(parquet dir) → segments → fused extraction →
-    append-mode mentions/triples sinks.  With available_now=True this
-    drains everything currently in the directory and stops (the batch
-    -compatible trigger used in tests); with False it runs continuously.
-    Returns the StreamingQuery."""
-    cfg = cfg or PipelineConfig()
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        segs = segment_transcripts(batch_df)
-        enriched, mentions, triples = extract_fused(segs, spark, cfg)
-        enriched.persist()
-        mentions.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            f"{output_dir}/mentions"
-        )
-        triples.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            f"{output_dir}/triples"
-        )
-        enriched.unpersist()
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from docs2kg_spark.plans.pipeline import INPUT_DDL, normalize_input
 
 
 # ---------------------------------------------------------------------------
 # Full incremental KG maintenance: the streaming lift of the WHOLE batch
 # pipeline (plans/pipeline.py) — extract → link → canonicalize →
-# materialize — not just the extraction stage above.
+# materialize.
 #
 # Design (the lambda shape an Iceberg-backed 10^12-turn deployment needs):
 #
@@ -142,7 +89,7 @@ _STATE_DDL = "node_id string, text string, label string, canonical_id string"
 
 
 def _read_or_empty(spark: SparkSession, store: TableStore, name: str, ddl: str) -> DataFrame:
-    if store.has_data(name):
+    if store.exists(name):
         return store.read(name)
     return spark.createDataFrame([], ddl)
 
@@ -174,7 +121,7 @@ def update_canonical_state(
     nodes_new = entity_nodes(new_mentions)
     # exclude THIS batch's own partition from "known" so a replayed batch
     # re-derives (and dynamic-overwrites) the identical delta
-    if store.has_data("link_nodes"):
+    if store.exists("link_nodes"):
         known = store.read("link_nodes").filter(F.col("_batch_id") != batch_id)
         nodes_new = nodes_new.join(known.select("node_id"), on="node_id", how="left_anti")
     # pin column order: the USING-join above moves node_id first, and a
@@ -182,11 +129,11 @@ def update_canonical_state(
     # physical column order must not depend on which path produced it
     nodes_new = nodes_new.select("node_id", "text", "label").localCheckpoint()
     n_new = nodes_new.count()
-    if n_new == 0 and store.has_data("canonical_state"):
+    if n_new == 0 and store.exists("canonical_state"):
         return {"n_new_surfaces": 0, "n_new_edges": 0, "n_remaps": 0}
 
     new_bands = band_table(nodes_new, cfg).localCheckpoint()
-    if store.has_data("link_bands"):
+    if store.exists("link_bands"):
         old_bands = (
             store.read("link_bands")
             .filter(F.col("_batch_id") != batch_id)
@@ -252,7 +199,7 @@ def update_canonical_state(
     )
 
     n_remaps = 0
-    if store.has_data("canonical_state"):
+    if store.exists("canonical_state"):
         old_state = store.read("canonical_state").select(
             "node_id", F.col("canonical_id").alias("old_canonical")
         )
@@ -260,13 +207,13 @@ def update_canonical_state(
             old_state.join(new_state.select("node_id", "canonical_id"), on="node_id")
             .filter(F.col("old_canonical") != F.col("canonical_id"))
             .select("node_id", "old_canonical", F.col("canonical_id").alias("new_canonical"))
-            .localCheckpoint()  # materialize BEFORE canonical_state is overwritten
+            .localCheckpoint()  # materialize BEFORE canonical_state is replaced
         )
         n_remaps = remaps.count()
         if n_remaps:
             store.append_batch(remaps, "canonical_remaps", batch_id)
-    # new_state is checkpointed above, so overwriting the path it was
-    # derived from is safe
+    # one committed snapshot: a crash before the commit leaves the previous
+    # state current, and the replayed batch re-derives the same delta
     store.write(new_state, "canonical_state")
     return {"n_new_surfaces": n_new, "n_new_edges": n_edges_new, "n_remaps": n_remaps}
 
@@ -281,7 +228,6 @@ def process_kg_batch(
     """The foreachBatch body of incremental_kg — also callable directly
     with a plain DataFrame (micro-batch semantics without a stream)."""
     from docs2kg_spark.operators.graph import static_kg_parts
-    from docs2kg_spark.plans.pipeline import normalize_input
 
     normalized = normalize_input(batch_df)
     bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
@@ -371,7 +317,7 @@ def incremental_kg(
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)
     stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        spark.readStream.schema(INPUT_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
@@ -403,7 +349,6 @@ def compact_kg(
     re-segmented from ``transcripts`` — required only if any exist, and
     bounded to exactly those conversations via a broadcast semi-join."""
     from docs2kg_spark.operators.graph import entity_kg_parts, static_kg_parts
-    from docs2kg_spark.plans.pipeline import normalize_input
 
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)

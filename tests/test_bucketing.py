@@ -90,25 +90,24 @@ def test_compact_merges_small_files_and_preserves_rows(spark, tmp_path):
 
     from docs2kg_spark.io.sinks import TableStore
 
+    def parquet_files():
+        return sum(
+            f.endswith(".parquet") for _r, _d, fs in os.walk(store.path("t")) for f in fs
+        )
+
     store = TableStore(spark, str(tmp_path))
     df = spark.range(0, 1000).withColumnRenamed("id", "v")
-    # simulate many tiny delta appends
-    for i in range(8):
-        store.append(df.filter((F.col("v") % 8) == i).repartition(4), "t")
+    # simulate a wide write of many tiny files
+    store.write(df.repartition(16), "t")
     before = {tuple(r) for r in store.read("t").collect()}
-    files_before = sum(
-        f.endswith(".parquet") for f in os.listdir(store.path("t"))
-    )
-    assert files_before >= 16
+    assert parquet_files() >= 16
 
     res = store.compact("t", target_file_bytes=1 << 30)
     assert res["rewritten"] and res["files_after"] == 1
-    files_after = sum(f.endswith(".parquet") for f in os.listdir(store.path("t")))
-    assert files_after == 1
+    # one committed snapshot left: the superseded one is deleted
+    assert parquet_files() == 1
+    assert [d for d in os.listdir(store.path("t")) if d.startswith("snap-")] == ["snap-2"]
     assert {tuple(r) for r in store.read("t").collect()} == before
-    # no leftover swap dirs
-    assert not os.path.exists(store.path("t") + "__compact_tmp")
-    assert not os.path.exists(store.path("t") + "__compact_old")
 
 
 def test_compact_noop_when_already_packed(spark, tmp_path):
@@ -132,14 +131,12 @@ def test_compact_refuses_partitioned_delta_logs(spark, tmp_path):
 
 
 def test_compact_preserves_resume_marker(spark, tmp_path):
-    """Compaction rewrites bytes, not content: a stage marker written
-    before compaction must still satisfy stage_complete after."""
+    """Compaction rewrites bytes, not content: the resume key committed
+    before compaction must still be current after."""
     from docs2kg_spark.io.sinks import TableStore
 
     store = TableStore(spark, str(tmp_path))
-    for i in range(4):
-        store.append(spark.range(i * 10, (i + 1) * 10).repartition(3), "seg")
-    store.write_marker("seg", "fp123")
-    store.compact("seg", target_file_bytes=1 << 30)
-    assert store.stage_complete("seg", "fp123")
+    store.write(spark.range(0, 40).repartition(12), "seg", key="fp123")
+    assert store.compact("seg", target_file_bytes=1 << 30)["rewritten"]
+    assert store.committed("seg", "fp123")
     assert store.read("seg").count() == 40

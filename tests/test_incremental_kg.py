@@ -157,7 +157,7 @@ def test_merge_across_batches_writes_remap_log(spark, tmp_path):
     winner = min(id_corp, id_corporation)
     loser = max(id_corp, id_corporation)
 
-    state = {r.node_id: r.canonical_id for r in spark.read.parquet(f"{wd}/canonical_state").collect()}
+    state = {r.node_id: r.canonical_id for r in TableStore(spark, wd).read("canonical_state").collect()}
     assert state[loser] == winner
     assert state[winner] == winner
 
@@ -184,7 +184,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
         return {
             name: sorted(map(tuple, store.read(name).collect()))
             for name in names
-            if store.has_data(name)
+            if store.exists(name)
         }
 
     s1 = process_kg_batch(spark, store, df, 0, cfg)
@@ -222,3 +222,52 @@ def test_redelivery_of_copied_file_is_idempotent(spark, tmp_path):
     after = compact_kg(spark, wd)
     assert _node_rows(after["kg_nodes"]) == nodes_before
     assert _edge_rows(after["kg_edges"]) == edges_before
+
+
+def test_canonical_state_commit_fault_then_replay(spark, tmp_path, monkeypatch):
+    """The canonical_state commit of batch 1 raises once: the batch must
+    raise, the state must still read as batch 0 left it, and replaying
+    batch 1 under the same batch_id must end with a clean run's tables."""
+    pdf = transcripts_pandas(8, 6, seed=17)
+    convs = sorted(pdf["conv_id"].unique())
+    batches = [
+        spark.createDataFrame(pdf[pdf["conv_id"].isin(convs[i::2])]) for i in range(2)
+    ]
+    cfg = PipelineConfig()
+    names = (
+        "segments", "mentions", "link_nodes", "link_bands", "link_edges",
+        "canonical_state", "canonical_remaps", "batch_metrics",
+    )
+
+    def tables(store):
+        return {
+            name: sorted(map(tuple, store.read(name).collect()))
+            for name in names
+            if store.exists(name)
+        }
+
+    clean = TableStore(spark, str(tmp_path / "clean"))
+    for b, df in enumerate(batches):
+        process_kg_batch(spark, clean, df, b, cfg)
+
+    store = TableStore(spark, str(tmp_path / "wd"))
+    process_kg_batch(spark, store, batches[0], 0, cfg)
+    state0 = tables(store)["canonical_state"]
+
+    real_commit = TableStore._commit
+    fired = []
+
+    def flaky_commit(self, name, *args, **kwargs):
+        if name == "canonical_state" and not fired:
+            fired.append(name)
+            raise RuntimeError("injected fault at the canonical_state commit")
+        return real_commit(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(TableStore, "_commit", flaky_commit)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        process_kg_batch(spark, store, batches[1], 1, cfg)
+    assert fired == ["canonical_state"]
+    assert tables(store)["canonical_state"] == state0
+
+    process_kg_batch(spark, store, batches[1], 1, cfg)  # replay
+    assert tables(store) == tables(clean)

@@ -1,5 +1,6 @@
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from docs2kg_spark.plans import run_pipeline
@@ -29,9 +30,6 @@ def test_pipeline_end_to_end_and_resume_idempotent(spark, transcripts_df, oracle
 
     # kill-and-rerun: delete a mid-pipeline checkpoint, rerun, converge
     res1["store"].drop("triples")
-    import os
-
-    os.remove(res1["store"].marker_path("triples"))
     res3 = run_pipeline(spark, transcripts_df, wd)
     assert res3["stage_times"]["triples"] > 0  # re-ran
     assert res3["stage_times"]["segments"] == 0.0  # still skipped
@@ -59,6 +57,16 @@ def test_metrics_written(spark, transcripts_df, tmp_path):
     # per-partition rows sum to table counts
     seg_rows = metrics.filter(F.col("stage") == "segments").agg(F.sum("rows")).collect()[0][0]
     assert seg_rows == res["segments"].count()
+    # LSH block stats of the canonical_map build ride the same table
+    want = ("canonical_map__n_blocks", "canonical_map__n_capped_blocks", "canonical_map__max_block_size")
+    block = {
+        r.stage: r.rows
+        for r in metrics.filter((F.col("partition_id") == -1) & F.col("stage").isin(*want)).collect()
+    }
+    assert set(block) == set(want)
+    assert block["canonical_map__n_blocks"] > 0
+    assert 0 <= block["canonical_map__n_capped_blocks"] <= block["canonical_map__n_blocks"]
+    assert block["canonical_map__max_block_size"] >= 1
 
 
 def test_transcripts_spark_deterministic(spark):
@@ -172,3 +180,54 @@ def test_fingerprint_duplicate_rows_do_not_cancel(spark):
     cfg = PipelineConfig()
     assert input_fingerprint(a, cfg) != input_fingerprint(b, cfg)
     assert input_fingerprint(a, cfg) == input_fingerprint(a.repartition(3), cfg)
+
+
+# ---------------------------------------------------------------------------
+# fault injection: a crash at a table's commit, then a resumed rerun
+# ---------------------------------------------------------------------------
+
+_TABLES = _STAGES + ("metadata_nodes", "metadata_edges")
+# stages whose commits land before each table's commit
+_DONE_BEFORE = {
+    "segments": (),
+    "mentions": ("segments",),
+    "canonical_map": ("segments", "mentions"),
+    "kg_edges": ("segments", "mentions", "canonical_map"),
+}
+
+
+@pytest.fixture(scope="module")
+def clean_digests(spark, tmp_path_factory):
+    res = run_pipeline(spark, _small_input(spark), str(tmp_path_factory.mktemp("clean")))
+    return {k: _table_hash(res[k]) for k in _TABLES}
+
+
+@pytest.mark.parametrize("table", sorted(_DONE_BEFORE))
+def test_commit_fault_then_resume_matches_clean_run(spark, tmp_path, monkeypatch, clean_digests, table):
+    """The commit of ``table`` raises once: the run must raise, and a
+    resumed rerun must skip every stage committed before the fault and
+    end with the clean run's tables."""
+    from docs2kg_spark.io.sinks import TableStore
+
+    real_commit = TableStore._commit
+    fired = []
+
+    def flaky_commit(self, name, *args, **kwargs):
+        if name == table and not fired:
+            fired.append(name)
+            raise RuntimeError(f"injected fault at the {name} commit")
+        return real_commit(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(TableStore, "_commit", flaky_commit)
+    df = _small_input(spark)
+    wd = str(tmp_path / "kg")
+    with pytest.raises(RuntimeError, match="injected fault"):
+        run_pipeline(spark, df, wd)
+    assert fired == [table]
+
+    res = run_pipeline(spark, df, wd)
+    for stage in _DONE_BEFORE[table]:
+        assert res["stage_times"][stage] == 0.0, stage
+    # kg_nodes and kg_edges are one stage, timed under kg_nodes
+    assert res["stage_times"]["kg_nodes" if table == "kg_edges" else table] > 0
+    assert {k: _table_hash(res[k]) for k in _TABLES} == clean_digests

@@ -4,9 +4,6 @@
   two-phase numbering must equal the single-reducer row_number model
   (Python sorted()) exactly — orderings mixing DESC/ASC, negative
   values, duplicates broken by a tie-break column.
-- TableStore.merge_upsert / snapshot_read: an arbitrary SEQUENCE of
-  merges must track the dict model at every step, and every historic
-  snapshot must replay its own point-in-time dict.
 """
 
 from hypothesis import HealthCheck, given, settings
@@ -14,7 +11,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from docs2kg_spark.functions.skew import global_row_number
-from docs2kg_spark.io.sinks import TableStore
 
 _SETTINGS = dict(
     max_examples=8,
@@ -42,37 +38,3 @@ def test_global_row_number_matches_sorted_model(spark, vals, desc):
     want = {i: rk + 1 for rk, (i, _v) in enumerate(model)}
     assert got == want
 
-
-@given(
-    steps=st.lists(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=6),
-                st.text(alphabet="abcxyz", min_size=1, max_size=3),
-            ),
-            min_size=1,
-            max_size=4,
-        ),
-        min_size=1,
-        max_size=4,
-    )
-)
-@settings(**_SETTINGS)
-def test_merge_upsert_tracks_dict_model_with_time_travel(spark, tmp_path_factory, steps):
-    store = TableStore(spark, str(tmp_path_factory.mktemp("prop_ts")))
-    model: dict = {}
-    history = []
-    for delta in steps:
-        # a delta may repeat a key; MERGE semantics need one row per key —
-        # keep the LAST occurrence, like the model
-        dedup = dict(delta)
-        df = spark.createDataFrame(list(dedup.items()), "k int, v string")
-        sid = store.merge_upsert(df, "t", keys=["k"])
-        model.update(dedup)
-        history.append((sid, dict(model)))
-        got = {r["k"]: r["v"] for r in store.snapshot_read("t").collect()}
-        assert got == model
-    # every historic snapshot replays its point-in-time state
-    for sid, snap in history:
-        got = {r["k"]: r["v"] for r in store.snapshot_read("t", sid).collect()}
-        assert got == snap

@@ -1,5 +1,3 @@
-from pyspark.sql import functions as F
-
 from docs2kg_spark.functions.skew import salted_count, salted_join
 
 
@@ -21,37 +19,3 @@ def test_salted_count_matches_groupby(spark):
     got = {r.k: r.n for r in salted_count(df, "k", n_salts=4).collect()}
     assert got == {"a": 100, "b": 3}
 
-
-def test_streaming_incremental_extract(spark, tmp_path):
-    """availableNow drain of a transcript directory must produce exactly
-    the batch pipeline's mentions/triples (same operators, same ids) and
-    be idempotent-by-content on re-delivery."""
-    from docs2kg_spark.fixtures import transcripts_pandas
-    from docs2kg_spark.operators.mentions import extract_fused
-    from docs2kg_spark.operators.segments import segment_transcripts
-    from docs2kg_spark.streaming.incremental import incremental_extract
-
-    pdf = transcripts_pandas(20, 8, seed=11)
-    in_dir = str(tmp_path / "in")
-    batch_df = spark.createDataFrame(pdf)
-    batch_df.write.mode("overwrite").parquet(in_dir)
-
-    out_dir = str(tmp_path / "out")
-    q = incremental_extract(spark, in_dir, out_dir, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got_m = {
-        (r.seg_id, r.start, r.end, r.text, r.label)
-        for r in spark.read.parquet(f"{out_dir}/mentions").collect()
-    }
-    segs = segment_transcripts(spark.read.parquet(in_dir))
-    _, want_mentions, want_triples = extract_fused(segs, spark)
-    want_m = {(r.seg_id, r.start, r.end, r.text, r.label) for r in want_mentions.collect()}
-    assert got_m == want_m
-
-    got_t = {
-        (r.seg_id, r.subj, r.pred, r.obj)
-        for r in spark.read.parquet(f"{out_dir}/triples").collect()
-    }
-    want_t = {(r.seg_id, r.subj, r.pred, r.obj) for r in want_triples.collect()}
-    assert got_t == want_t
