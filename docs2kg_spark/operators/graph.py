@@ -138,13 +138,11 @@ def static_kg_parts(
     """Canonicalization-INDEPENDENT slice of the KG: file + segment nodes
     and the structural CONTAINS/NEXT edges.  These depend only on the
     segment rows of their own conversation — never on entity linking —
-    so the incremental pipeline (streaming/incremental.py) appends them
-    per micro-batch and never rewrites them when a later batch merges
-    entity surfaces.  Returns
+    but need each conversation's whole ordered segment list (seg_idx).
+    Returns
     (static_nodes(conv_id, node_id, canonical_id, type, properties),
-     struct_edges(src, dst, type, conv_id, properties)); the conv_id
-    column on nodes exists for per-conversation repair/replace at
-    compaction and is dropped by materialize_kg."""
+     struct_edges(src, dst, type, conv_id, properties)); materialize_kg
+    drops the conv_id column on nodes."""
     file_nodes = (
         segments.select("conv_id")
         .distinct()
@@ -176,9 +174,8 @@ def entity_kg_parts(
 ) -> tuple[DataFrame, DataFrame]:
     """Canonicalization-DEPENDENT slice of the KG: surviving entity nodes
     plus the HAS_ENTITY / relation edges redirected through
-    canonical_map.  The incremental pipeline recomputes exactly this
-    slice at compaction (entity merges in a later batch invalidate it),
-    while the static slice streams through untouched.  Returns
+    canonical_map.  Depends on seg_idx nowhere: mentions and triples key
+    on the content-addressed seg_id.  Returns
     (entity_nodes(node_id, canonical_id, type, properties),
      entity_edges(src, dst, type, conv_id, properties))."""
     # entity nodes: only canonical survivors materialize (the analog of

@@ -82,26 +82,20 @@ def input_fingerprint(transcripts: DataFrame, cfg: PipelineConfig) -> str:
     return f"{row['n']}:{row['h']}:{cfg_hash}"
 
 
-def split_quarantine(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
+def split_quarantine(
+    transcripts: DataFrame, obs: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The one quarantine rule: normalize, then split off the rows with a
+    null conv_id or turn_idx, with their reason.  With ``obs``, the count
+    of bad rows (``n_bad``) rides the pass that consumes the good rows, so
+    a clean input costs no extra scan to prove it clean."""
     transcripts = normalize_input(transcripts)
     bad = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
-    return transcripts.filter(~bad), transcripts.filter(bad).withColumn(
+    src = transcripts
+    if obs is not None:
+        src = transcripts.observe(obs, F.sum(bad.cast("long")).alias("n_bad"))
+    return src.filter(~bad), transcripts.filter(bad).withColumn(
         "quarantine_reason", F.lit("null conv_id or turn_idx")
-    )
-
-
-def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts (SURVEY §2.4 'stage metrics') computed at
-    runtime — the generic form for any DataFrame.  The pipeline itself
-    sources the same numbers from parquet footers after each stage write
-    (TableStore.partition_counts): O(files) driver-side metadata reads
-    instead of one full re-scan Spark job per stage, which at 1000
-    executors would serialize a scan of every stage output through the
-    metrics path."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .withColumn("stage", F.lit(stage))
     )
 
 
@@ -170,17 +164,11 @@ def run_pipeline(
         # nothing, and only when bad rows are OBSERVED does a side job
         # scan the input again to materialize them with reasons.  The
         # old always-on side write re-scanned the full input every run.
-        normalized = normalize_input(transcripts)
-        bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
         seg_fresh = not current("segments")
         q_obs = Observation("quarantine_probe") if seg_fresh else None
-        src = normalized.observe(q_obs, F.sum(bad_cond.cast("long")).alias("n_bad")) if q_obs else normalized
-        good = src.filter(~bad_cond)
-        quarantined = normalized.filter(bad_cond).withColumn(
-            "quarantine_reason", F.lit("null conv_id or turn_idx")
-        )
+        good, quarantined = split_quarantine(transcripts, q_obs)
         quarantine_ddl = ", ".join(
-            f"{c} {t}" for c, t in INPUT_SCHEMA.items() if c in normalized.columns
+            f"{c} {t}" for c, t in INPUT_SCHEMA.items() if c in transcripts.columns
         ) + ", quarantine_reason string"
 
         if cfg.segment_bucket_turns > 0:
@@ -211,30 +199,10 @@ def run_pipeline(
             store.write(e, "metadata_edges", key=fp)
             stage_times["metadata_nodes"] = time.monotonic() - t0
 
-        # Overlapping the metadata branch with the extraction critical path
-        # measured NEGATIVE at high local parallelism (local[32]: +50s — its
-        # shuffle/write tasks interleave into the Arrow-UDF stage's slots and
-        # strangle it) but POSITIVE at low (local[8]: −4s, where the branch
-        # is otherwise a pure serial insertion).  So: overlap on real
-        # clusters (the branch's tasks land on OTHER executors) and in
-        # local mode up to 8 slots; serial above that.
-        # The paired same-stage table writes (mentions+triples,
-        # kg_nodes+kg_edges) measured POSITIVE at both levels (local[32]:
-        # 37s vs 55s serial) — two jobs over the SAME checkpointed input keep
-        # all slots busy through each other's write tails — so they always
-        # run concurrently.
-        overlap_meta = (
-            not spark.sparkContext.master.startswith("local")
-            or spark.sparkContext.defaultParallelism <= 8
-        )
         if current("metadata_nodes", "metadata_edges"):
             stage_times["metadata_nodes"] = 0.0
-            meta_future = None
-        elif overlap_meta:
-            meta_future = side.submit(_meta_branch)
         else:
-            _meta_branch()
-            meta_future = None
+            meta_future = side.submit(_meta_branch)
 
         # fused extraction: mentions + triples in ONE Arrow pass, no shuffle
         # (the per-segment pair generation runs inside the UDF; see
@@ -248,12 +216,10 @@ def run_pipeline(
             from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 
             enriched, _, _ = extract_fused(segments, spark, cfg)
-            # checkpoint the UDF output itself: guarantees exactly ONE
-            # extraction pass (a .persist() can evict under memory pressure
-            # and silently re-run the UDF)
-            store.write(enriched, "extraction", key=fp)
-            stage_times["x_extraction_write"] = time.monotonic() - t0
-            mentions_df, triples_df = explode_extraction(store.read("extraction"))
+            # checkpoint the UDF output itself: exactly ONE extraction pass
+            # feeds both projections (a .persist() can evict under memory
+            # pressure and silently re-run the UDF)
+            mentions_df, triples_df = explode_extraction(enriched.localCheckpoint())
             # the two explode-projections read the same checkpoint and are
             # independent → concurrent jobs
             with ThreadPoolExecutor(max_workers=2) as pool:

@@ -5,8 +5,8 @@ its batch loop (cli.py:208-213).  The engine's equivalent ingest surface
 reads newline-delimited JSON transcripts into the contract schema
 (BASELINE.json::input_hint) and captures malformed lines as quarantine
 rows instead of dropping them silently or killing the job — the same
-visible-quarantine policy the pipeline applies to null-keyed rows
-(plans/pipeline.py::split_quarantine).
+visible-quarantine policy the batch and micro-batch paths apply to
+null-keyed rows (plans/pipeline.py::split_quarantine, their one rule).
 
 Scale design: read lines with `spark.read.text` and parse with
 `from_json` against an EXPLICIT schema (no sampling inference pass over

@@ -2,19 +2,18 @@
 
 The reference is strictly batch (SURVEY.md §2.9 — no streaming anywhere
 in the tree), and so is the main pipeline.  This module is the §2.9
-"lift": the same extraction operators applied to a stream of transcript
-files with `readStream` + `foreachBatch`, giving incremental KG
-construction with exactly-once file-source semantics and the same
-content-addressed idempotence (re-delivered turns produce identical
-seg_ids/mention rows → downstream MERGE/dedup is a no-op).
+"lift": the same operators applied to a stream of transcript files with
+`readStream` + `foreachBatch`, giving incremental KG construction with
+exactly-once file-source semantics and content-addressed idempotence
+(re-delivered turns produce identical seg_ids/mention rows, which
+compaction collapses).
 
 The per-batch body reuses the *batch* operators untouched — no operator
 forks between batch and streaming (foreachBatch hands us a plain
-DataFrame).  Stateful windows/watermarks are intentionally NOT used:
-segmentation needs per-conversation total order, which for append-only
-transcript logs is re-established per micro-batch per conv_id (late
-turns for an already-materialized conversation land in the mentions
-table idempotently and are folded by the next canonicalization run).
+DataFrame).  Stateful windows/watermarks are not used, and turns may
+arrive in any order and split across any number of micro-batches: the
+only order-dependent part of the KG (seg_idx, CONTAINS/NEXT) is built
+once, at compaction, over each whole conversation.
 """
 
 from __future__ import annotations
@@ -24,9 +23,10 @@ from pyspark.sql import functions as F
 
 from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.io.sinks import TableStore
+from docs2kg_spark.operators.graph import materialize_kg
 from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
-from docs2kg_spark.plans.pipeline import INPUT_DDL, normalize_input
+from docs2kg_spark.plans.pipeline import INPUT_DDL, split_quarantine
 
 
 # ---------------------------------------------------------------------------
@@ -34,15 +34,13 @@ from docs2kg_spark.plans.pipeline import INPUT_DDL, normalize_input
 # pipeline (plans/pipeline.py) — extract → link → canonicalize →
 # materialize.
 #
-# Design (the lambda shape an Iceberg-backed 10^12-turn deployment needs):
-#
-# * per micro-batch, APPEND-ONLY delta logs for everything whose rows are a
-#   pure function of their own conversation: segments, mentions, triples,
-#   and the canonicalization-INDEPENDENT KG slice (file/segment nodes,
-#   CONTAINS/NEXT edges — graph.static_kg_parts).  Content-addressed ids
-#   make the logs stable under replay; each batch writes its own
-#   `_batch_id=N` partition with dynamic overwrite, so Structured
-#   Streaming's replay-on-failure (same batch_id) is exactly-once.
+# * per micro-batch, APPEND-ONLY delta logs of segments, mentions and
+#   triples.  Content-addressed ids make the logs stable under replay;
+#   each batch writes its own `_batch_id=N` partition with dynamic
+#   overwrite, so Structured Streaming's replay-on-failure (same
+#   batch_id) is exactly-once.  The log's seg_idx is per-batch and read by
+#   nothing: mentions, triples and linking key on the content-addressed
+#   seg_id (conv_id, turn_idx, text), which seg_idx never enters.
 #
 # * per micro-batch, an INCREMENTAL canonicalization update: only the
 #   batch's genuinely-new (text,label) surfaces are MinHash-banded, and
@@ -58,12 +56,11 @@ from docs2kg_spark.plans.pipeline import INPUT_DDL, normalize_input
 #   `canonical_remaps` audit log (node_id, old → new, batch) — the MERGE
 #   feed for any downstream mirror (e.g. a Neo4j replica).
 #
-# * compact_kg folds the logs into serve tables: the static slice streams
-#   through (it was final the moment it was written); only the
-#   canonicalization-DEPENDENT entity slice (entity nodes + HAS_ENTITY /
-#   relation edges, graph.entity_kg_parts) is recomputed against the final
-#   canonical map — a broadcast-sized dimension join over the accumulated
-#   mentions/triples, the Iceberg-MERGE analog.
+# * compact_kg builds the serve tables with the batch path's own two
+#   functions: segment_transcripts re-segments the distinct turns of the
+#   segments log (seg_idx numbered over each whole conversation), and
+#   materialize_kg joins them with the accumulated mentions/triples and
+#   the final canonical map.
 #
 # Known, documented divergences from the batch pipeline:
 # * LSH block caps apply to the block size AS OF the batch that generates
@@ -73,15 +70,6 @@ from docs2kg_spark.plans.pipeline import INPUT_DDL, normalize_input
 # * compaction deduplicates delta rows exactly (content-addressed), which
 #   also collapses the pathological case of two turns sharing
 #   (conv_id, turn_idx, text) — the batch path would keep both.
-#
-# Ordering contract: a conversation's turns should arrive within one
-# micro-batch (the standard log-rotation contract: a conversation is
-# written when it closes).  seg_idx and the layout windows need the whole
-# conversation; conversations that DO span batches are detected via the
-# per-batch conv log and repaired at compaction from the source table
-# (bounded to exactly the split conversations — everything else in the
-# logs is already correct because extraction is per-segment text and
-# seg_id does not involve seg_idx).
 # ---------------------------------------------------------------------------
 
 _EMPTY_EDGES_DDL = "a string, b string"
@@ -92,6 +80,14 @@ def _read_or_empty(spark: SparkSession, store: TableStore, name: str, ddl: str) 
     if store.exists(name):
         return store.read(name)
     return spark.createDataFrame([], ddl)
+
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """localCheckpoint ``df``; its row count rides the checkpoint job as an
+    Observation instead of costing a second count() job."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return df, int(obs.get["n"] or 0)
 
 
 def update_canonical_state(
@@ -127,8 +123,7 @@ def update_canonical_state(
     # pin column order: the USING-join above moves node_id first, and a
     # replayed batch dynamic-overwrites its partition — the delta log's
     # physical column order must not depend on which path produced it
-    nodes_new = nodes_new.select("node_id", "text", "label").localCheckpoint()
-    n_new = nodes_new.count()
+    nodes_new, n_new = _checkpoint_counted(nodes_new.select("node_id", "text", "label"))
     if n_new == 0 and store.exists("canonical_state"):
         return {"n_new_surfaces": 0, "n_new_edges": 0, "n_remaps": 0}
 
@@ -172,8 +167,7 @@ def update_canonical_state(
         )
         .distinct()
     )
-    edges_new = verified_edges(pairs, cfg).localCheckpoint()
-    n_edges_new = edges_new.count()
+    edges_new, n_edges_new = _checkpoint_counted(verified_edges(pairs, cfg))
 
     if n_new:
         store.append_batch(nodes_new, "link_nodes", batch_id)
@@ -203,13 +197,12 @@ def update_canonical_state(
         old_state = store.read("canonical_state").select(
             "node_id", F.col("canonical_id").alias("old_canonical")
         )
-        remaps = (
+        # materialized BEFORE canonical_state is replaced
+        remaps, n_remaps = _checkpoint_counted(
             old_state.join(new_state.select("node_id", "canonical_id"), on="node_id")
             .filter(F.col("old_canonical") != F.col("canonical_id"))
             .select("node_id", "old_canonical", F.col("canonical_id").alias("new_canonical"))
-            .localCheckpoint()  # materialize BEFORE canonical_state is replaced
         )
-        n_remaps = remaps.count()
         if n_remaps:
             store.append_batch(remaps, "canonical_remaps", batch_id)
     # one committed snapshot: a crash before the commit leaves the previous
@@ -227,30 +220,12 @@ def process_kg_batch(
 ) -> dict:
     """The foreachBatch body of incremental_kg — also callable directly
     with a plain DataFrame (micro-batch semantics without a stream)."""
-    from docs2kg_spark.operators.graph import static_kg_parts
-
-    normalized = normalize_input(batch_df)
-    bad_cond = F.col("conv_id").isNull() | F.col("turn_idx").isNull()
     q_obs = Observation(f"inc_quarantine_{batch_id}")
-    src = normalized.observe(q_obs, F.sum(bad_cond.cast("long")).alias("n_bad"))
-    good = src.filter(~bad_cond)
-
-    seg_obs = Observation(f"inc_segs_{batch_id}")
-    segs = (
-        segment_transcripts(good)
-        .observe(seg_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    n_segs = int(seg_obs.get["n"] or 0)
+    good, quarantined = split_quarantine(batch_df, q_obs)
+    segs, n_segs = _checkpoint_counted(segment_transcripts(good))
     n_bad = int(q_obs.get["n_bad"] or 0)
     if n_bad:
-        store.append_batch(
-            normalized.filter(bad_cond).withColumn(
-                "quarantine_reason", F.lit("null conv_id or turn_idx")
-            ),
-            "quarantine",
-            batch_id,
-        )
+        store.append_batch(quarantined, "quarantine", batch_id)
 
     # ONE Arrow extraction pass, checkpointed, then two narrow projections
     enriched, _, _ = extract_fused(segs, spark, cfg)
@@ -264,20 +239,6 @@ def process_kg_batch(
     store.append_batch(
         triples.observe(t_obs, F.count(F.lit(1)).alias("n")), "triples", batch_id
     )
-
-    schema = dict(cfg.layout_schema) if cfg.layout_schema is not None else None
-    static_nodes, struct_edges = static_kg_parts(segs, schema)
-    store.append_batch(static_nodes, "kg_static_nodes", batch_id)
-    store.append_batch(struct_edges, "kg_struct_edges", batch_id)
-
-    # conv → batch lineage (one row per conversation per batch): the split-
-    # conversation detector compact_kg uses, and per-batch provenance
-    conv_log = segs.groupBy("conv_id").agg(
-        F.count("*").alias("n_segs"),
-        F.min("turn_idx").alias("min_turn"),
-        F.max("turn_idx").alias("max_turn"),
-    )
-    store.append_batch(conv_log, "conv_batches", batch_id)
 
     link_stats = update_canonical_state(spark, store, mentions, cfg, batch_id)
 
@@ -339,77 +300,33 @@ def compact_kg(
     spark: SparkSession,
     workdir: str,
     cfg: PipelineConfig | None = None,
-    transcripts: DataFrame | None = None,
 ) -> dict:
-    """Fold the incremental delta logs into kg_nodes / kg_edges serve
-    tables.  The static slice (file/segment nodes, CONTAINS/NEXT edges)
-    passes through from the logs; the entity slice is recomputed against
-    the final canonical map (graph.entity_kg_parts).  Conversations that
-    spanned micro-batches (wrong seg_idx → wrong layout windows) are
-    re-segmented from ``transcripts`` — required only if any exist, and
-    bounded to exactly those conversations via a broadcast semi-join."""
-    from docs2kg_spark.operators.graph import entity_kg_parts, static_kg_parts
-
+    """Build the kg_nodes / kg_edges serve tables from the delta logs with
+    the batch path's own functions: segment_transcripts over the distinct
+    turns of the segments log (so seg_idx and the layout windows see each
+    whole conversation, however its turns were split across or ordered
+    between micro-batches), then materialize_kg with the accumulated
+    mentions/triples and the final canonical map."""
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, workdir)
     schema = dict(cfg.layout_schema) if cfg.layout_schema is not None else None
 
+    turns = store.read("segments").select("conv_id", "turn_idx", "role", "text", "tool").distinct()
     mentions = store.read("mentions").drop("_batch_id").distinct()
     triples = store.read("triples").drop("_batch_id").distinct()
-    static_nodes = store.read("kg_static_nodes").drop("_batch_id").distinct()
-    struct_edges = store.read("kg_struct_edges").drop("_batch_id").distinct()
-
-    # a conversation is SPLIT iff different micro-batches saw different
-    # slices of it (distinct per-batch (n_segs, min_turn, max_turn)
-    # signatures).  A byte-identical redelivery lands the SAME signature in
-    # two batches — that is idempotent replay, not a split, and the
-    # content-addressed delta rows collapse at the distinct() above.
-    split_convs = (
-        store.read("conv_batches")
-        .groupBy("conv_id")
-        .agg(
-            F.count_distinct(
-                F.struct("n_segs", "min_turn", "max_turn")
-            ).alias("n_sigs")
-        )
-        .filter(F.col("n_sigs") > 1)
-        .select("conv_id")
-        .localCheckpoint()
-    )
-    n_split = split_convs.count()
-    if n_split:
-        if transcripts is None:
-            raise ValueError(
-                f"{n_split} conversation(s) span multiple micro-batches; their "
-                "seg_idx-dependent structure needs repair — pass transcripts="
-            )
-        good = normalize_input(transcripts).filter(
-            F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-        )
-        src = good.join(F.broadcast(split_convs), on="conv_id", how="left_semi")
-        rep_nodes, rep_edges = static_kg_parts(segment_transcripts(src), schema)
-        static_nodes = static_nodes.join(
-            F.broadcast(split_convs), on="conv_id", how="left_anti"
-        ).unionByName(rep_nodes)
-        struct_edges = struct_edges.join(
-            F.broadcast(split_convs), on="conv_id", how="left_anti"
-        ).unionByName(rep_edges)
-        # mentions / triples / linking need NO repair: extraction is a pure
-        # function of each segment's text, and seg_id is content-addressed
-        # from (conv_id, turn_idx, text) — seg_idx never enters them
-
     canonical_state = _read_or_empty(spark, store, "canonical_state", _STATE_DDL)
-    entity_nodes_df, entity_edges = entity_kg_parts(
-        mentions, triples, canonical_state.select("node_id", "text", "label", "canonical_id")
+    kg_nodes, kg_edges = materialize_kg(
+        segment_transcripts(turns),
+        mentions,
+        triples,
+        canonical_state.select("node_id", "text", "label", "canonical_id"),
+        layout_schema=schema,
     )
-    kg_nodes = static_nodes.drop("conv_id").unionByName(entity_nodes_df)
-    kg_edges = struct_edges.unionByName(entity_edges)
     store.write(kg_nodes, "kg_nodes")
     store.write(kg_edges, "kg_edges")
     return {
         "kg_nodes": store.read("kg_nodes"),
         "kg_edges": store.read("kg_edges"),
         "canonical_map": canonical_state,
-        "n_split_convs": n_split,
         "store": store,
     }

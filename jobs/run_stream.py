@@ -1,13 +1,15 @@
 #!/usr/bin/env python
 """spark-submit entry point for the STREAMING KG maintenance path.
 
-Watches a directory of transcript parquet files and maintains the full
-knowledge graph incrementally (extraction → incremental linking →
-per-batch delta materialization), exactly-once under file re-delivery
-(streaming/incremental.py).  After a drain, --compact rebuilds the
-kg_nodes/kg_edges serve tables — byte-identical to what the batch
-pipeline (jobs/run_kg.py) would produce over the union of all input
-(parity-tested in tests/test_incremental_kg.py).
+Watches a directory of transcript parquet files and maintains the
+knowledge graph's inputs incrementally (per-batch segment, mention and
+triple delta logs → incremental linking), exactly-once under file
+re-delivery (streaming/incremental.py).  A conversation's turns may
+arrive in any order, split across files and micro-batches.  After a
+drain, --compact builds the kg_nodes/kg_edges serve tables with the batch
+pipeline's own segmentation and materialization — the same rows
+jobs/run_kg.py produces over the union of all input (parity-tested in
+tests/test_incremental_kg.py and tests/test_run_stream_cli.py).
 
 Cluster usage:
 

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import datetime
 import glob
+import os
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -81,8 +83,13 @@ def test_incremental_matches_batch(spark, tmp_path):
         _write_stream_file(spark, pdf[pdf.conv_id.isin(chunk)], in_dir, f"f{i}", tmp_path)
 
     wd = _drain(spark, in_dir, tmp_path, "m")
+    # the drain writes the three delta logs, the link state and the
+    # per-batch metrics — no per-batch KG slice
+    assert sorted(os.listdir(wd)) == [
+        "batch_metrics", "canonical_remaps", "canonical_state", "link_bands",
+        "link_edges", "link_nodes", "mentions", "segments", "triples",
+    ]
     inc = compact_kg(spark, wd)
-    assert inc["n_split_convs"] == 0
 
     batch = run_pipeline(
         spark, spark.createDataFrame(pdf), str(tmp_path / "batch_wd"), resume=False
@@ -96,27 +103,34 @@ def test_incremental_matches_batch(spark, tmp_path):
 
 
 def test_split_conversation_detected_and_repaired(spark, tmp_path):
-    """A conversation spanning two micro-batches gets wrong per-batch
-    seg_idx; compact must refuse silently-wrong output, then repair from
-    the source, restoring exact batch parity."""
+    """A conversation delivered in three files, late turns first, gets a
+    per-batch seg_idx in each micro-batch; compaction re-segments the
+    whole conversation and reaches exact batch parity with no repair
+    input."""
     pdf = transcripts_pandas(12, 8, seed=13)
     convs = sorted(pdf.conv_id.unique())
-    victim = convs[0]
-    early = pdf[pdf.conv_id.isin(convs[:6]) & ~((pdf.conv_id == victim) & (pdf.turn_idx >= 3))]
-    late = pdf[pdf.conv_id.isin(convs[6:]) | ((pdf.conv_id == victim) & (pdf.turn_idx >= 3))]
+    victim = pdf.conv_id.value_counts().idxmax()
+    assert pdf[pdf.conv_id == victim].turn_idx.nunique() >= 3
+    cuts = sorted(pdf[pdf.conv_id == victim].turn_idx.unique())
+    lo, hi = cuts[len(cuts) // 3], cuts[2 * len(cuts) // 3]
+    v = pdf.conv_id == victim
+    parts = (
+        pdf[v & (pdf.turn_idx >= hi)],
+        pdf[v & (pdf.turn_idx >= lo) & (pdf.turn_idx < hi)],
+        pdf[v & (pdf.turn_idx < lo)],
+    )
+    others = [c for c in convs if c != victim]
     in_dir = tmp_path / "in"
-    _write_stream_file(spark, early, in_dir, "f0", tmp_path)
-    _write_stream_file(spark, late, in_dir, "f1", tmp_path)
+    for i, part in enumerate(parts):
+        chunk = pdf[pdf.conv_id.isin(others[i::3])]
+        _write_stream_file(spark, pd.concat([part, chunk]), in_dir, f"f{i}", tmp_path)
 
     wd = _drain(spark, in_dir, tmp_path, "s")
-    with pytest.raises(ValueError, match="span multiple micro-batches"):
-        compact_kg(spark, wd)
+    metrics = spark.read.parquet(f"{wd}/batch_metrics").collect()
+    assert sorted(r.batch_id for r in metrics) == [0, 1, 2]
+    inc = compact_kg(spark, wd)
 
-    full = spark.createDataFrame(pdf)
-    inc = compact_kg(spark, wd, transcripts=full)
-    assert inc["n_split_convs"] == 1
-
-    batch = run_pipeline(spark, full, str(tmp_path / "batch_wd"), resume=False)
+    batch = run_pipeline(spark, spark.createDataFrame(pdf), str(tmp_path / "batch_wd"), resume=False)
     _assert_kg_parity(inc, batch)
 
 
@@ -140,8 +154,6 @@ def test_merge_across_batches_writes_remap_log(spark, tmp_path):
     rows1 = [("c1", 0, "user", f"Alice: {first}!", None, TS)]
     rows2 = [("c2", 0, "user", f"Bob: {second}!", None, TS)]
     in_dir = tmp_path / "in"
-    import pandas as pd
-
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
     def _pdf(rows):
