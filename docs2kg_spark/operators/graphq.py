@@ -9,23 +9,32 @@ bounded-hop neighborhood expansion (Cypher's variable-length patterns),
 PageRank-style importance, and triangle participation.
 
 Scale design (DataFrame-only, no Python in the loop, except the
-driver route of k_hop and personalized_pagerank):
-- degrees: two partial+final hash aggregates + one full-outer equi-join
-  on node id.  No skew beyond what the graph itself has; AQE splits hot
-  nodes.
-- k_hop and personalized_pagerank: an edge table of at most
+driver routes of degrees, k_hop and personalized_pagerank):
+- degrees (distributed): one explode of both endpoints and one
+  partial+final hash aggregate on node id.  No skew beyond what the
+  graph itself has; AQE splits hot nodes.
+- k_hop, personalized_pagerank and degrees: an edge table of at most
   PipelineConfig.cc_driver_max_edges rows (the bound that also picks
   linking's driver union-find) is counted, collected once through Arrow
-  and walked on the driver by vectorized Arrow / NumPy kernels — 4
-  Spark jobs (count map + result, edges, seeds) instead of one
-  localCheckpoint job plus shuffles per hop or iteration; the result
-  goes back through Arrow, which starts no job.  Larger tables pay the
-  count's 2 jobs, then take the DataFrame loops below, with the same
-  answers (parity-tested).  On 4 vCPUs, Zipf-target parquet edge tables of
-  50k-800k edges, the driver route was faster at every size (k_hop
-  k=2: 0.52-0.65 s vs 0.65-1.21 s; 3-iteration PPR: 0.72-1.56 s vs
-  2.35-6.44 s), so the bound sits below the crossover; it caps the
-  driver's memory (~33 MB of driver-process growth at 800k edges).
+  and walked on the driver by vectorized Arrow / NumPy kernels.  A frame
+  over committed files is prepared once per snapshot (edge arrays,
+  dictionary-coded ids, out-degrees) and kept in a small module cache
+  keyed by its files' URIs, sizes and mtimes plus its plan, so a commit
+  is never served stale.  Once its snapshot is prepared a k_hop read
+  runs 1 Spark job (the seeds) and a personalized_pagerank read 1 plus
+  whatever the caller's collect runs; a cold read adds the count's 2
+  jobs and the edge collect.  The result goes back through Arrow, which
+  starts no job.  Frames with no input files (createDataFrame) take the
+  count and the collect on every k_hop / personalized_pagerank read
+  and degrees' aggregate.  Larger tables pay the count's 2 jobs (none
+  when the cached graph knows its size), then take the DataFrame loops
+  below, with the same answers (parity-tested).  On 4 vCPUs,
+  Zipf-target parquet edge tables of 50k-800k edges, the driver route
+  was faster at every size (k_hop k=2: 0.52-0.65 s vs 0.65-1.21 s;
+  3-iteration PPR: 0.72-1.56 s vs 2.35-6.44 s), so the bound sits below
+  the crossover; it caps the driver's memory (~33 MB of driver-process
+  growth at 800k edges, measured before the prepared graph added two
+  int64 codes per edge; the cache holds at most _PREPARED_MAX graphs).
 - k_hop (distributed): frontier BFS — per hop one equi-join
   frontier⋈edges, one distinct, one left-anti against visited; the
   frontier is localCheckpoint'ed per hop so the plan stays flat
@@ -49,6 +58,11 @@ driver route of k_hop and personalized_pagerank):
 
 from __future__ import annotations
 
+import os
+import threading
+from typing import NamedTuple
+from urllib.parse import unquote, urlparse
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -60,21 +74,30 @@ from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from docs2kg_spark.config import PipelineConfig
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degrees(
+    edges: DataFrame, src: str = "src", dst: str = "dst", cfg: PipelineConfig | None = None
+) -> DataFrame:
     """→ (node, out_degree, in_degree, degree).  Counts parallel edges
     as given (pass a distinct'ed edge table for simple-graph counts).
 
     One pass: each edge explodes into (src,1) and (dst,0) and a single
     partial+final aggregate folds both directions — one scan and ONE
     shuffle, where the textbook out⋈in formulation scans the edge table
-    twice, shuffles twice, and full-outer-joins the halves."""
+    twice, shuffles twice, and full-outer-joins the halves.
+
+    Driver route: a frame over committed files (see _driver_graph) of
+    at most cfg.cc_driver_max_edges rows is answered from its prepared
+    graph by two bincounts, with the aggregate's schema and no Spark
+    job once the snapshot is prepared.  Other frames aggregate, as
+    there is no prepared graph to reuse: a count and a collect on every
+    read would cost more jobs than the aggregate."""
     endpoint = F.explode(
         F.array(
             F.struct(F.col(src).alias("node"), F.lit(1).cast("bigint").alias("o")),
             F.struct(F.col(dst).alias("node"), F.lit(0).cast("bigint").alias("o")),
         )
     )
-    return (
+    out = (
         edges.select(endpoint.alias("e"))
         .select("e.node", "e.o")
         .groupBy("node")
@@ -84,6 +107,11 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
             F.count("*").alias("degree"),
         )
     )
+    g = _driver_graph(edges, cfg, src, dst, cached_only=True)
+    if g is None:
+        return out
+    indeg = np.bincount(g.di, minlength=len(g.nodes))
+    return _node_frame(edges.sparkSession, out.schema, g.nodes, g.outdeg, indeg, g.outdeg + indeg)
 
 
 def degree_histogram(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -98,18 +126,93 @@ def undirect(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     return fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
-def _driver_edges(edges: DataFrame, cfg: PipelineConfig | None) -> tuple | None:
-    """(src, dst) Arrow arrays of ``edges`` when it has at most
+class _Graph(NamedTuple):
+    """A driver-side edge table: the Arrow ``src``/``dst`` arrays, their
+    dictionary coding (``nodes``; ``si``/``di`` index it per edge) and
+    the out-degree of each node."""
+
+    src: pa.Array
+    dst: pa.Array
+    nodes: pa.Array
+    si: np.ndarray
+    di: np.ndarray
+    outdeg: np.ndarray
+
+
+def _prepare(src: pa.Array, dst: pa.Array) -> _Graph:
+    nodes = pc.unique(pa.concat_arrays([src, dst]))
+    si = pc.index_in(src, value_set=nodes).to_numpy()
+    di = pc.index_in(dst, value_set=nodes).to_numpy()
+    return _Graph(src, dst, nodes, si, di, np.bincount(si, minlength=len(nodes)))
+
+
+# Prepared graphs of committed edge snapshots, most recently used last:
+# (session, snapshot key, the select(src, dst) frame, graph) entries.
+_PREPARED_MAX = 4
+_prepared: list[tuple] = []
+_prepared_lock = threading.Lock()
+
+
+def _snapshot_key(e: DataFrame) -> tuple | None:
+    """What pins ``e``'s rows to one committed snapshot: each input
+    file's URI, size and mtime.  A commit writes new part files (Spark
+    names them after the write job), so every commit changes the key,
+    even a rewrite into the same snapshot dir, which leaves the plan,
+    and so sameSemantics, unchanged.  None (not cacheable) for a frame
+    with no input files, a non-deterministic plan, a non-``file:`` URI
+    or a file that is gone.  The key covers files only: a plan that also
+    reads a source without files (JDBC, say) would be served stale, and
+    no reader here builds one."""
+    files = e.inputFiles()
+    if not files or not e._jdf.queryExecution().analyzed().deterministic():
+        return None
+    key = []
+    for uri in sorted(files):
+        parsed = urlparse(uri)
+        if parsed.scheme != "file":
+            return None
+        try:
+            st = os.stat(unquote(parsed.path))
+        except OSError:
+            return None
+        key.append((uri, st.st_size, st.st_mtime_ns))
+    return tuple(key)
+
+
+def _cached_graph(e: DataFrame, key: tuple) -> _Graph | None:
+    with _prepared_lock:
+        for i, (session, k, frame, g) in enumerate(_prepared):
+            if session is e.sparkSession and k == key and e.sameSemantics(frame):
+                _prepared.append(_prepared.pop(i))
+                return g
+    return None
+
+
+def _remember(e: DataFrame, key: tuple, g: _Graph) -> None:
+    with _prepared_lock:
+        _prepared.append((e.sparkSession, key, e, g))
+        del _prepared[:-_PREPARED_MAX]
+
+
+def _driver_graph(
+    edges: DataFrame, cfg: PipelineConfig | None, src: str = "src", dst: str = "dst", cached_only: bool = False
+) -> _Graph | None:
+    """``edges`` as a driver-side _Graph when it has at most
     cfg.cc_driver_max_edges rows, else None (also for a bound <= 0,
     without touching the table).
 
-    A column-pruned count runs first (under AQE two Spark jobs: one
-    partial count per partition, then their sum; on parquet it reads no
-    column data); only under the bound does one Arrow collect of src,
-    dst follow.  A bounded collect (``limit(cap + 1).toArrow()``) would
-    be a single job, but its limit shuffles up to cap + 1 (src, dst)
-    rows from every partition into one — all of it discarded on exactly
-    the large tables the distributed route exists for.
+    A frame over committed files (see _snapshot_key) is prepared once
+    per snapshot and served from a small module cache afterwards, with
+    no Spark job; a cached graph serves a read only while its edge
+    count is within the caller's bound.  Otherwise a column-pruned count
+    runs first (under AQE two Spark jobs: one partial count per
+    partition, then their sum; on parquet it reads no column data); only
+    under the bound does one Arrow collect of src, dst follow.  A
+    bounded collect (``limit(cap + 1).toArrow()``) would be a single
+    job, but its limit shuffles up to cap + 1 (src, dst) rows from every
+    partition into one, all of it discarded on exactly the large tables
+    the distributed route exists for.  ``cached_only`` returns None for
+    a frame that cannot be cached, instead of counting it.
 
     The driver routes take node ids as non-null, as kg_edges writes
     them: a null endpoint does not get the distributed joins' null
@@ -117,11 +220,20 @@ def _driver_edges(edges: DataFrame, cfg: PipelineConfig | None) -> tuple | None:
     cap = (cfg or PipelineConfig()).cc_driver_max_edges
     if cap <= 0:
         return None
-    e = edges.select("src", "dst")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    key = _snapshot_key(e)
+    if key is None and cached_only:
+        return None
+    g = _cached_graph(e, key) if key is not None else None
+    if g is not None:
+        return g if len(g.src) <= cap else None
     if e.count() > cap:
         return None
     t = e.toArrow()
-    return t.column("src").combine_chunks(), t.column("dst").combine_chunks()
+    g = _prepare(t.column("src").combine_chunks(), t.column("dst").combine_chunks())
+    if key is not None:
+        _remember(e, key, g)
+    return g
 
 
 def _seed_ids(seeds: DataFrame, id_type: pa.DataType) -> pa.Array:
@@ -129,16 +241,14 @@ def _seed_ids(seeds: DataFrame, id_type: pa.DataType) -> pa.Array:
     return pc.unique(seeds.select("node").toArrow().column("node").combine_chunks().cast(id_type))
 
 
-def _node_frame(edges: DataFrame, node_type, col: str, col_type, nodes: pa.Array, values) -> DataFrame:
-    """A driver-side (node, col) result as a DataFrame through Arrow: no
-    Spark job, where a Python-list createDataFrame runs one through a
-    Python worker."""
-    schema = StructType([StructField("node", node_type), StructField(col, col_type, False)])
+def _node_frame(spark, schema: StructType, nodes: pa.Array, *values) -> DataFrame:
+    """A driver-side result, one row per node of ``nodes``, as a
+    DataFrame of ``schema`` through Arrow: no Spark job, where a
+    Python-list createDataFrame runs one through a Python worker."""
     arrow = to_arrow_schema(schema)
-    table = pa.table(
-        [nodes.cast(arrow.field("node").type), pa.array(values, arrow.field(col).type)], schema=arrow
-    )
-    return edges.sparkSession.createDataFrame(table, schema)
+    cols = [nodes.cast(arrow.field(0).type)]
+    cols += [pa.array(v, arrow.field(i + 1).type) for i, v in enumerate(values)]
+    return spark.createDataFrame(pa.table(cols, schema=arrow), schema)
 
 
 def _bfs_hops(src: pa.Array, dst: pa.Array, seeds: pa.Array, k: int) -> tuple:
@@ -177,17 +287,17 @@ def k_hop(
     Driver route: an edge table of at most cfg.cc_driver_max_edges rows
     (`cfg=None` takes the PipelineConfig default; 0 forces the
     distributed route) is collected once and walked by a vectorized
-    BFS on the driver — 4 jobs in all (2 for the count, edges, seeds),
-    whatever k is.
+    BFS on the driver, whatever k is: 1 job (the seeds) over a prepared
+    snapshot, 4 on a cold read (2 for the count, edges, seeds).
 
-    Distributed route (after the count job, unless the bound is 0), ONE
-    job per hop: only the new frontier is
-    checkpointed and its size rides that same job as an Observation (no
-    separate isEmpty() job).  The anti-join's right side is the lazy
-    union of the prior frontier checkpoints (frontiers are disjoint by
-    construction), read from the already-materialized blocks, never
-    rewritten.  The returned DataFrame is the lazy union of all
-    frontiers.
+    Distributed route (after the count jobs, unless the bound is 0 or a
+    cached graph knows the size), ONE job per hop: only the new
+    frontier is checkpointed and its size rides that same job as an
+    Observation (no separate isEmpty() job).  The anti-join's right
+    side is the lazy union of the prior frontier checkpoints (frontiers
+    are disjoint by construction), read from the already-materialized
+    blocks, never rewritten.  The returned DataFrame is the lazy union
+    of all frontiers.
 
     Frontier counts are KNOWN (the Observation), so while frontier and
     visited stay under ``broadcast_below`` rows the hop join and the
@@ -198,11 +308,13 @@ def k_hop(
     plan when the frontier is a large fraction of a 100 TB graph."""
     from functools import reduce
 
-    arrays = _driver_edges(edges, cfg)
-    if arrays is not None:
-        src, dst = arrays
-        nodes, hops = _bfs_hops(src, dst, _seed_ids(seeds, src.type), k)
-        return _node_frame(edges, seeds.schema["node"].dataType, "hops", IntegerType(), nodes, hops)
+    g = _driver_graph(edges, cfg)
+    if g is not None:
+        nodes, hops = _bfs_hops(g.src, g.dst, _seed_ids(seeds, g.src.type), k)
+        schema = StructType(
+            [StructField("node", seeds.schema["node"].dataType), StructField("hops", IntegerType(), False)]
+        )
+        return _node_frame(edges.sparkSession, schema, nodes, hops)
 
     first = seeds.select("node").distinct().withColumn("hops", F.lit(0)).localCheckpoint()
     n_seen = first.count()  # blocks already materialized — metadata-cheap
@@ -258,21 +370,18 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
     return ranks
 
 
-def _ppr_ranks(src: pa.Array, dst: pa.Array, seeds: pa.Array, iters: int, damping: float) -> tuple:
-    """(nodes, pr): the personalized_pagerank recurrence over the edge
-    arrays, vectorized — node ids are dictionary-coded once, then each
-    iteration is one weighted bincount over the edges.  Parallel edges
-    and self-loops count, as in the joins."""
-    nodes = pc.unique(pa.concat_arrays([src, dst]))
-    si = pc.index_in(src, value_set=nodes).to_numpy()
-    di = pc.index_in(dst, value_set=nodes).to_numpy()
-    deg = np.bincount(si, minlength=len(nodes))[si]  # outdeg(src) per edge
-    base = pc.is_in(nodes, value_set=seeds).to_numpy(zero_copy_only=False).astype(np.float64)
+def _ppr_ranks(g: _Graph, seeds: pa.Array, iters: int, damping: float) -> np.ndarray:
+    """pr per node of ``g.nodes``: the personalized_pagerank recurrence
+    over the dictionary-coded edges, vectorized — each iteration is one
+    weighted bincount over the edges.  Parallel edges and self-loops
+    count, as in the joins."""
+    deg = g.outdeg[g.si]  # outdeg(src) per edge
+    base = pc.is_in(g.nodes, value_set=seeds).to_numpy(zero_copy_only=False).astype(np.float64)
     pr = base
     for _ in range(iters):
-        s = np.bincount(di, weights=pr[si] / deg, minlength=len(nodes))
+        s = np.bincount(g.di, weights=pr[g.si] / deg, minlength=len(g.nodes))
         pr = (1.0 - damping) * base + damping * s
-    return nodes, pr
+    return pr
 
 
 def personalized_pagerank(
@@ -292,19 +401,22 @@ def personalized_pagerank(
     Driver route: an edge table of at most cfg.cc_driver_max_edges rows
     (`cfg=None` takes the PipelineConfig default; 0 forces the
     distributed route) is collected once and the recurrence runs on the
-    driver in NumPy — 4 jobs in all (2 for the count, edges, seeds),
-    whatever iters is.
+    driver in NumPy, whatever iters is: 1 job (the seeds) over a
+    prepared snapshot, 4 on a cold read (2 for the count, edges, seeds).
 
-    Distributed route (after the count job, unless the bound is 0), the
-    shape of pagerank (the cited Cypher-analog read): seed sets are
-    small by definition, so the membership join is broadcast; edge
+    Distributed route (after the count jobs, unless the bound is 0 or a
+    cached graph knows the size), the shape of pagerank (the cited
+    Cypher-analog read): seed sets are small by definition, so the
+    membership join is broadcast; edge
     shares are pre-divided once and localCheckpointed; one equi-join +
     one sum agg per iteration, node-sized frames only."""
-    arrays = _driver_edges(edges, cfg)
-    if arrays is not None:
-        src, dst = arrays
-        nodes, pr = _ppr_ranks(src, dst, _seed_ids(seeds, src.type), iters, damping)
-        return _node_frame(edges, edges.schema["src"].dataType, "pr", DoubleType(), nodes, pr)
+    g = _driver_graph(edges, cfg)
+    if g is not None:
+        pr = _ppr_ranks(g, _seed_ids(seeds, g.src.type), iters, damping)
+        schema = StructType(
+            [StructField("node", edges.schema["src"].dataType), StructField("pr", DoubleType(), False)]
+        )
+        return _node_frame(edges.sparkSession, schema, g.nodes, pr)
 
     e = edges.select("src", "dst")
     seed_marked = seeds.select(F.col("node"), F.lit(1.0).alias("is_seed")).distinct()

@@ -349,3 +349,154 @@ def test_graph_read_route_boundary_is_cc_driver_max_edges(spark, monkeypatch):
     assert results[n - 1][2] == []
     assert results[n][0] == results[n - 1][0]
     assert results[n][1] == pytest.approx(results[n - 1][1], abs=1e-12)
+
+
+# ---------------------------------------------------------------------------
+# prepared graphs of committed kg_edges snapshots
+# ---------------------------------------------------------------------------
+
+
+def _store_edges(spark, store, pairs):
+    store.write(_edges(spark, pairs), "kg_edges")
+    return store.read("kg_edges")
+
+
+def _hops(spark, e, seed="a", k=3, cfg=None):
+    seeds = spark.createDataFrame([(seed,)], "node string")
+    return {r["node"]: r["hops"] for r in k_hop(e, seeds, k=k, cfg=cfg).collect()}
+
+
+def test_graph_read_after_new_commit_sees_new_edges(spark, tmp_path):
+    from docs2kg_spark.io.sinks import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    assert _hops(spark, _store_edges(spark, store, [("a", "b"), ("b", "c")])) == {"a": 0, "b": 1, "c": 2}
+    e = _store_edges(spark, store, [("a", "x"), ("x", "y")])
+    assert _hops(spark, e) == {"a": 0, "x": 1, "y": 2}
+
+
+def test_graph_read_after_drop_and_rewrite_of_same_snapshot_dir(spark, tmp_path):
+    """The plan of a read is the same across a drop + rewrite into
+    snap-1; the part files are not."""
+    from docs2kg_spark.io.sinks import TableStore
+
+    store = TableStore(spark, str(tmp_path))
+    first = _store_edges(spark, store, [("a", "b"), ("b", "c")])
+    assert _hops(spark, first) == {"a": 0, "b": 1, "c": 2}
+    store.drop("kg_edges")
+    second = _store_edges(spark, store, [("a", "c"), ("c", "d")])
+    assert second.inputFiles()[0].split("/")[-2] == "snap-1"
+    assert second.sameSemantics(first)
+    assert _hops(spark, second) == {"a": 0, "c": 1, "d": 2}
+
+
+def test_filtered_frame_is_not_served_the_unfiltered_graph(spark, tmp_path):
+    from docs2kg_spark.io.sinks import TableStore
+
+    e = _store_edges(spark, TableStore(spark, str(tmp_path)), [("a", "b"), ("b", "c"), ("a", "z")])
+    assert _hops(spark, e) == {"a": 0, "b": 1, "c": 2, "z": 1}
+    assert _hops(spark, e.filter(F.col("dst") != "z")) == {"a": 0, "b": 1, "c": 2}
+
+
+def test_cached_graph_over_a_lowered_bound_takes_the_distributed_loop(spark, tmp_path, monkeypatch):
+    from docs2kg_spark.io.sinks import TableStore
+    from docs2kg_spark.operators import graphq
+
+    pairs = _parity_graph()
+    e = _store_edges(spark, TableStore(spark, str(tmp_path)), pairs)
+    driver = _hops(spark, e, seed="n00", k=40)  # prepares and caches the graph
+    calls = []
+    kernel = graphq._bfs_hops
+    monkeypatch.setattr(graphq, "_bfs_hops", lambda *a: calls.append(1) or kernel(*a))
+    dist = _hops(spark, e, seed="n00", k=40, cfg=PipelineConfig(cc_driver_max_edges=len(pairs) - 1))
+    assert calls == []
+    assert dist == driver
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs that ``fn`` submits, from the status tracker."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.5)  # the tracker learns of jobs from the listener bus
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_k_hop_over_one_snapshot_runs_only_the_seed_collect(spark, tmp_path):
+    from docs2kg_spark.io.sinks import TableStore
+
+    e = _store_edges(spark, TableStore(spark, str(tmp_path)), [("a", "b"), ("b", "c")])
+    seeds = spark.createDataFrame([("a",)], "node string")
+    assert _jobs_run_by(spark, lambda: k_hop(e, seeds, k=2).collect()) > 1
+    assert _jobs_run_by(spark, lambda: k_hop(e, seeds, k=2).collect()) == 1
+
+
+def test_degrees_driver_and_distributed_routes_agree(spark, tmp_path):
+    from docs2kg_spark.io.sinks import TableStore
+
+    pairs = _parity_graph()
+    store = TableStore(spark, str(tmp_path))
+    store.write(spark.createDataFrame(pairs, "a string, b string"), "edges")
+    e = store.read("edges")
+    driver = degrees(e, "a", "b")
+    dist = degrees(e, "a", "b", cfg=PipelineConfig(cc_driver_max_edges=0))
+    assert driver.schema == dist.schema
+    assert _jobs_run_by(spark, driver.collect) == 0  # served from the prepared graph
+    got = [tuple(r) for r in driver.collect()]
+    assert len(got) == len({r[0] for r in got})
+    assert set(got) == {tuple(r) for r in dist.collect()}
+
+
+def test_prepared_graph_cache_under_concurrent_readers(monkeypatch):
+    """Threads that look up and insert prepared graphs at once: a lookup
+    only ever returns its own snapshot's graph, and the cache stays
+    within its bound."""
+    import sys
+    import threading
+
+    from docs2kg_spark.operators import graphq
+
+    class Frame:  # the two DataFrame members the cache touches
+        sparkSession = "session"
+
+        def __init__(self, plan):
+            self.plan = plan
+
+        def sameSemantics(self, other):
+            return self.plan == other.plan
+
+    monkeypatch.setattr(graphq, "_prepared", [])
+    errors = []
+
+    def reader(t):
+        try:
+            for i in range(400):
+                key, frame = ((f"part-{t}-{i % 6}", 1, 1),), Frame(t)
+                g = graphq._cached_graph(frame, key)
+                if g is None:
+                    graphq._remember(frame, key, (t, i % 6))
+                elif g != (t, i % 6):
+                    errors.append((t, i, g))
+        except Exception as exc:  # noqa: BLE001 - reported by the assert below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(graphq._prepared) <= graphq._PREPARED_MAX
