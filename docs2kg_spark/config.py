@@ -138,13 +138,14 @@ class PipelineConfig:
     # or under it is collected once and read on the driver, a larger
     # one (or a bound of 0) runs the per-hop / per-iteration DataFrame
     # loop or degrees' aggregate.  A frame over committed files is
-    # prepared once per snapshot and cached, so later reads of that
-    # snapshot skip the count and the collect; degrees takes the driver
-    # route only for such frames.  One field, two decisions: a bound of
-    # 0 forces star CC AND the distributed graph reads.  Measured for
-    # the reads (4 vCPUs, synthetic Zipf-target graphs of 50k-800k
-    # edges), the driver route stayed faster up to 800k, so 200k sits
-    # below both reads' crossover.
+    # prepared once per snapshot and cached (one graph), so later reads
+    # of that snapshot skip the count and the collect; degrees takes the
+    # driver route only over a snapshot k_hop or personalized_pagerank
+    # has prepared.  One field, two decisions: a bound of 0 forces star
+    # CC AND the distributed graph reads.  Measured for the reads (4
+    # vCPUs, synthetic Zipf-target graphs of 50k-800k edges), the driver
+    # route stayed faster up to 800k, so 200k sits below both reads'
+    # crossover.
     cc_driver_max_edges: int = 200_000
     # When the distinct (text,label) surface vocabulary fits under this
     # bound, the WHOLE linking stage (MinHash -> LSH banding -> block cap

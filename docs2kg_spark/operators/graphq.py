@@ -15,26 +15,20 @@ driver routes of degrees, k_hop and personalized_pagerank):
   graph itself has; AQE splits hot nodes.
 - k_hop, personalized_pagerank and degrees: an edge table of at most
   PipelineConfig.cc_driver_max_edges rows (the bound that also picks
-  linking's driver union-find) is counted, collected once through Arrow
-  and walked on the driver by vectorized Arrow / NumPy kernels.  A frame
-  over committed files is prepared once per snapshot (edge arrays,
-  dictionary-coded ids, out-degrees) and kept in a small module cache
-  keyed by its files' URIs, sizes and mtimes plus its plan, so a commit
-  is never served stale.  Once its snapshot is prepared a k_hop read
-  runs 1 Spark job (the seeds) and a personalized_pagerank read 1 plus
-  whatever the caller's collect runs; a cold read adds the count's 2
-  jobs and the edge collect.  The result goes back through Arrow, which
-  starts no job.  Frames with no input files (createDataFrame) take the
-  count and the collect on every k_hop / personalized_pagerank read
-  and degrees' aggregate.  Larger tables pay the count's 2 jobs (none
-  when the cached graph knows its size), then take the DataFrame loops
-  below, with the same answers (parity-tested).  On 4 vCPUs,
-  Zipf-target parquet edge tables of 50k-800k edges, the driver route
-  was faster at every size (k_hop k=2: 0.52-0.65 s vs 0.65-1.21 s;
-  3-iteration PPR: 0.72-1.56 s vs 2.35-6.44 s), so the bound sits below
-  the crossover; it caps the driver's memory (~33 MB of driver-process
-  growth at 800k edges, measured before the prepared graph added two
-  int64 codes per edge; the cache holds at most _PREPARED_MAX graphs).
+  linking's driver union-find) is read on the driver by vectorized
+  Arrow / NumPy kernels.  k_hop and personalized_pagerank count it and
+  collect it once through Arrow.  A frame over committed files is
+  prepared once per snapshot (edge arrays, dictionary-coded ids,
+  out-degrees) and cached, keyed by its files' URIs, sizes and mtimes
+  plus its plan, so a commit is never served stale; degrees reads only
+  that cached graph and never counts or collects for it.  Larger tables
+  take the DataFrame loops below, with the same answers
+  (parity-tested).  On 4 vCPUs, Zipf-target parquet edge tables of
+  50k-800k edges, the driver route was faster at every size (k_hop
+  k=2: 0.52-0.65 s vs 0.65-1.21 s; 3-iteration PPR: 0.72-1.56 s vs
+  2.35-6.44 s), so the bound sits below the crossover; it caps the
+  driver's memory, as the one cached graph holds both id columns plus
+  two int64 codes per edge.
 - k_hop (distributed): frontier BFS — per hop one equi-join
   frontier⋈edges, one distinct, one left-anti against visited; the
   frontier is localCheckpoint'ed per hop so the plan stays flat
@@ -85,12 +79,12 @@ def degrees(
     shuffle, where the textbook out⋈in formulation scans the edge table
     twice, shuffles twice, and full-outer-joins the halves.
 
-    Driver route: a frame over committed files (see _driver_graph) of
-    at most cfg.cc_driver_max_edges rows is answered from its prepared
-    graph by two bincounts, with the aggregate's schema and no Spark
-    job once the snapshot is prepared.  Other frames aggregate, as
-    there is no prepared graph to reuse: a count and a collect on every
-    read would cost more jobs than the aggregate."""
+    Driver route: when k_hop or personalized_pagerank has already
+    prepared ``edges``' snapshot (see _driver_graph) and it has at most
+    cfg.cc_driver_max_edges rows, the answer is two bincounts over that
+    graph, with the aggregate's schema and no Spark job.  degrees never
+    counts or collects a frame to prepare it: over a frame read once,
+    that would scan it again before the aggregate it replaces."""
     endpoint = F.explode(
         F.array(
             F.struct(F.col(src).alias("node"), F.lit(1).cast("bigint").alias("o")),
@@ -107,8 +101,10 @@ def degrees(
             F.count("*").alias("degree"),
         )
     )
-    g = _driver_graph(edges, cfg, src, dst, cached_only=True)
-    if g is None:
+    cap = (cfg or PipelineConfig()).cc_driver_max_edges
+    e = _edge_pairs(edges, src, dst)
+    g = _cached_graph(e, _snapshot_key(e)) if cap > 0 else None
+    if g is None or len(g.src) > cap:
         return out
     indeg = np.bincount(g.di, minlength=len(g.nodes))
     return _node_frame(edges.sparkSession, out.schema, g.nodes, g.outdeg, indeg, g.outdeg + indeg)
@@ -146,10 +142,13 @@ def _prepare(src: pa.Array, dst: pa.Array) -> _Graph:
     return _Graph(src, dst, nodes, si, di, np.bincount(si, minlength=len(nodes)))
 
 
-# Prepared graphs of committed edge snapshots, most recently used last:
-# (session, snapshot key, the select(src, dst) frame, graph) entries.
-_PREPARED_MAX = 4
-_prepared: list[tuple] = []
+def _edge_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+
+
+# The prepared graph of the last committed edge snapshot a driver-route
+# read collected: (session, snapshot key, the _edge_pairs frame, graph).
+_prepared: tuple | None = None
 _prepared_lock = threading.Lock()
 
 
@@ -179,52 +178,44 @@ def _snapshot_key(e: DataFrame) -> tuple | None:
     return tuple(key)
 
 
-def _cached_graph(e: DataFrame, key: tuple) -> _Graph | None:
+def _cached_graph(e: DataFrame, key: tuple | None) -> _Graph | None:
+    """The prepared graph of ``e``'s snapshot, if it is the cached one."""
+    if key is None:
+        return None
     with _prepared_lock:
-        for i, (session, k, frame, g) in enumerate(_prepared):
-            if session is e.sparkSession and k == key and e.sameSemantics(frame):
-                _prepared.append(_prepared.pop(i))
-                return g
-    return None
+        entry = _prepared
+    if entry is None:
+        return None
+    session, k, frame, g = entry
+    return g if session is e.sparkSession and k == key and e.sameSemantics(frame) else None
 
 
-def _remember(e: DataFrame, key: tuple, g: _Graph) -> None:
-    with _prepared_lock:
-        _prepared.append((e.sparkSession, key, e, g))
-        del _prepared[:-_PREPARED_MAX]
-
-
-def _driver_graph(
-    edges: DataFrame, cfg: PipelineConfig | None, src: str = "src", dst: str = "dst", cached_only: bool = False
-) -> _Graph | None:
-    """``edges`` as a driver-side _Graph when it has at most
-    cfg.cc_driver_max_edges rows, else None (also for a bound <= 0,
-    without touching the table).
+def _driver_graph(edges: DataFrame, cfg: PipelineConfig | None) -> _Graph | None:
+    """``edges`` (columns src, dst) as a driver-side _Graph when it has
+    at most cfg.cc_driver_max_edges rows, else None (also for a bound
+    <= 0, without touching the table).
 
     A frame over committed files (see _snapshot_key) is prepared once
-    per snapshot and served from a small module cache afterwards, with
-    no Spark job; a cached graph serves a read only while its edge
-    count is within the caller's bound.  Otherwise a column-pruned count
-    runs first (under AQE two Spark jobs: one partial count per
-    partition, then their sum; on parquet it reads no column data); only
-    under the bound does one Arrow collect of src, dst follow.  A
-    bounded collect (``limit(cap + 1).toArrow()``) would be a single
-    job, but its limit shuffles up to cap + 1 (src, dst) rows from every
-    partition into one, all of it discarded on exactly the large tables
-    the distributed route exists for.  ``cached_only`` returns None for
-    a frame that cannot be cached, instead of counting it.
+    per snapshot and then served from the module cache with no Spark
+    job, while its edge count is within the caller's bound.  Otherwise
+    a column-pruned count runs first (under AQE two Spark jobs: one
+    partial count per partition, then their sum; on parquet it reads no
+    column data); only under the bound does one Arrow collect of src,
+    dst follow.  A bounded collect (``limit(cap + 1).toArrow()``) would
+    be a single job, but its limit shuffles up to cap + 1 (src, dst)
+    rows from every partition into one, all of it discarded on exactly
+    the large tables the distributed route exists for.
 
     The driver routes take node ids as non-null, as kg_edges writes
     them: a null endpoint does not get the distributed joins' null
     semantics."""
+    global _prepared
     cap = (cfg or PipelineConfig()).cc_driver_max_edges
     if cap <= 0:
         return None
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = _edge_pairs(edges, "src", "dst")
     key = _snapshot_key(e)
-    if key is None and cached_only:
-        return None
-    g = _cached_graph(e, key) if key is not None else None
+    g = _cached_graph(e, key)
     if g is not None:
         return g if len(g.src) <= cap else None
     if e.count() > cap:
@@ -232,7 +223,8 @@ def _driver_graph(
     t = e.toArrow()
     g = _prepare(t.column("src").combine_chunks(), t.column("dst").combine_chunks())
     if key is not None:
-        _remember(e, key, g)
+        with _prepared_lock:
+            _prepared = (e.sparkSession, key, e, g)
     return g
 
 
@@ -407,9 +399,9 @@ def personalized_pagerank(
     Distributed route (after the count jobs, unless the bound is 0 or a
     cached graph knows the size), the shape of pagerank (the cited
     Cypher-analog read): seed sets are small by definition, so the
-    membership join is broadcast; edge
-    shares are pre-divided once and localCheckpointed; one equi-join +
-    one sum agg per iteration, node-sized frames only."""
+    membership join is broadcast; edge shares are pre-divided once and
+    localCheckpointed; one equi-join + one sum agg per iteration,
+    node-sized frames only."""
     g = _driver_graph(edges, cfg)
     if g is not None:
         pr = _ppr_ranks(g, _seed_ids(seeds, g.src.type), iters, damping)

@@ -440,11 +440,13 @@ def test_second_k_hop_over_one_snapshot_runs_only_the_seed_collect(spark, tmp_pa
 
 def test_degrees_driver_and_distributed_routes_agree(spark, tmp_path):
     from docs2kg_spark.io.sinks import TableStore
+    from docs2kg_spark.operators import graphq
 
     pairs = _parity_graph()
     store = TableStore(spark, str(tmp_path))
     store.write(spark.createDataFrame(pairs, "a string, b string"), "edges")
     e = store.read("edges")
+    graphq._driver_graph(e.select(F.col("a").alias("src"), F.col("b").alias("dst")), None)  # as k_hop would
     driver = degrees(e, "a", "b")
     dist = degrees(e, "a", "b", cfg=PipelineConfig(cc_driver_max_edges=0))
     assert driver.schema == dist.schema
@@ -454,49 +456,15 @@ def test_degrees_driver_and_distributed_routes_agree(spark, tmp_path):
     assert set(got) == {tuple(r) for r in dist.collect()}
 
 
-def test_prepared_graph_cache_under_concurrent_readers(monkeypatch):
-    """Threads that look up and insert prepared graphs at once: a lookup
-    only ever returns its own snapshot's graph, and the cache stays
-    within its bound."""
-    import sys
-    import threading
-
+def test_degrees_never_prepares_a_graph(spark, tmp_path, monkeypatch):
+    """Over a snapshot no read has prepared, degrees starts no job before
+    its own aggregate is collected, and caches nothing."""
+    from docs2kg_spark.io.sinks import TableStore
     from docs2kg_spark.operators import graphq
 
-    class Frame:  # the two DataFrame members the cache touches
-        sparkSession = "session"
-
-        def __init__(self, plan):
-            self.plan = plan
-
-        def sameSemantics(self, other):
-            return self.plan == other.plan
-
-    monkeypatch.setattr(graphq, "_prepared", [])
-    errors = []
-
-    def reader(t):
-        try:
-            for i in range(400):
-                key, frame = ((f"part-{t}-{i % 6}", 1, 1),), Frame(t)
-                g = graphq._cached_graph(frame, key)
-                if g is None:
-                    graphq._remember(frame, key, (t, i % 6))
-                elif g != (t, i % 6):
-                    errors.append((t, i, g))
-        except Exception as exc:  # noqa: BLE001 - reported by the assert below
-            errors.append(exc)
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join(timeout=60)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(th.is_alive() for th in threads)
-    assert errors == []
-    assert len(graphq._prepared) <= graphq._PREPARED_MAX
+    monkeypatch.setattr(graphq, "_prepared", None)
+    e = _store_edges(spark, TableStore(spark, str(tmp_path)), [("a", "b"), ("b", "c"), ("a", "c")])
+    out = []
+    assert _jobs_run_by(spark, lambda: out.append(degrees(e))) == 0
+    assert graphq._prepared is None
+    assert {r["node"]: r["degree"] for r in out[0].collect()} == {"a": 2, "b": 2, "c": 2}
