@@ -44,28 +44,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docs2kg_spark.session import arrow_table
+
 _LOG = "_version_log.json"
-
-
-def _arrow_table(rows: list[tuple], schema: str):
-    """A pyarrow table of ``rows`` typed by the DDL string ``schema``."""
-    import pyarrow as pa
-
-    types = {
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "string": pa.string(),
-        "double": pa.float64(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }
-    fields = []
-    for col in schema.split(","):
-        cname, ctype = col.strip().rsplit(" ", 1)
-        fields.append(pa.field(cname, types[ctype]))
-    return pa.table(
-        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(fields)],
-        schema=pa.schema(fields),
-    )
 
 
 class TableStore:
@@ -131,14 +112,15 @@ class TableStore:
 
     def write_rows(self, rows: list[tuple], schema: str, name: str, key: str | None = None) -> str:
         """``write`` for a small driver-side row set (metrics, an empty
-        quarantine): a direct pyarrow write, zero Spark jobs, committed
-        through the same log.  ``schema`` is the usual DDL string."""
+        quarantine, the ontology): a direct pyarrow write, zero Spark
+        jobs, committed through the same log.  ``schema`` is the usual
+        DDL string."""
         import pyarrow.parquet as pq
 
         sid, d = self._next_snapshot(name)
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d)
-        pq.write_table(_arrow_table(rows, schema), os.path.join(d, "part-00000.parquet"))
+        pq.write_table(arrow_table(schema, rows), os.path.join(d, "part-00000.parquet"))
         self._commit(name, sid, key)
         return d
 
@@ -171,7 +153,7 @@ class TableStore:
         p = self.path(name)
         os.makedirs(p, exist_ok=True)
         tmp = os.path.join(p, f".part-{suffix}.parquet.tmp")
-        pq.write_table(_arrow_table(rows, schema), tmp)
+        pq.write_table(arrow_table(schema, rows), tmp)
         os.replace(tmp, os.path.join(p, f"part-{suffix}.parquet"))
         return p
 

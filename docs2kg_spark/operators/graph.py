@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from docs2kg_spark.functions.ids import det_id_col, entity_node_id
 from docs2kg_spark.functions.labels import sanitize_label_col
+from docs2kg_spark.session import driver_frame
 
 # parent → allowed children (the transcript analog of the layout schema
 # written at layout_kg.py:127-147): a header section contains paragraphs
@@ -340,7 +341,7 @@ def metadata_kg(df: DataFrame, id_col: str, threshold: float = 0.5) -> tuple[Dat
 
     if value_nodes is None:
         value_nodes = doc_nodes.limit(0)
-        edges = df.sparkSession.createDataFrame([], "source string, target string, type string")
+        edges = driver_frame(df.sparkSession, "source string, target string, type string")
 
     return doc_nodes.unionByName(value_nodes), edges
 

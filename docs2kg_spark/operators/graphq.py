@@ -62,10 +62,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from docs2kg_spark.config import PipelineConfig
+from docs2kg_spark.session import driver_frame
 
 
 def degrees(
@@ -107,7 +107,7 @@ def degrees(
     if g is None or len(g.src) > cap:
         return out
     indeg = np.bincount(g.di, minlength=len(g.nodes))
-    return _node_frame(edges.sparkSession, out.schema, g.nodes, g.outdeg, indeg, g.outdeg + indeg)
+    return driver_frame(edges.sparkSession, out.schema, columns=(g.nodes, g.outdeg, indeg, g.outdeg + indeg))
 
 
 def degree_histogram(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -233,16 +233,6 @@ def _seed_ids(seeds: DataFrame, id_type: pa.DataType) -> pa.Array:
     return pc.unique(seeds.select("node").toArrow().column("node").combine_chunks().cast(id_type))
 
 
-def _node_frame(spark, schema: StructType, nodes: pa.Array, *values) -> DataFrame:
-    """A driver-side result, one row per node of ``nodes``, as a
-    DataFrame of ``schema`` through Arrow: no Spark job, where a
-    Python-list createDataFrame runs one through a Python worker."""
-    arrow = to_arrow_schema(schema)
-    cols = [nodes.cast(arrow.field(0).type)]
-    cols += [pa.array(v, arrow.field(i + 1).type) for i, v in enumerate(values)]
-    return spark.createDataFrame(pa.table(cols, schema=arrow), schema)
-
-
 def _bfs_hops(src: pa.Array, dst: pa.Array, seeds: pa.Array, k: int) -> tuple:
     """(nodes, hops): min hops from any seed along src → dst, up to k.
     Each hop is one vectorized is_in pass over the edge arrays — the
@@ -306,7 +296,7 @@ def k_hop(
         schema = StructType(
             [StructField("node", seeds.schema["node"].dataType), StructField("hops", IntegerType(), False)]
         )
-        return _node_frame(edges.sparkSession, schema, nodes, hops)
+        return driver_frame(edges.sparkSession, schema, columns=(nodes, hops))
 
     first = seeds.select("node").distinct().withColumn("hops", F.lit(0)).localCheckpoint()
     n_seen = first.count()  # blocks already materialized — metadata-cheap
@@ -408,7 +398,7 @@ def personalized_pagerank(
         schema = StructType(
             [StructField("node", edges.schema["src"].dataType), StructField("pr", DoubleType(), False)]
         )
-        return _node_frame(edges.sparkSession, schema, g.nodes, pr)
+        return driver_frame(edges.sparkSession, schema, columns=(g.nodes, pr))
 
     e = edges.select("src", "dst")
     seed_marked = seeds.select(F.col("node"), F.lit(1.0).alias("is_seed")).distinct()

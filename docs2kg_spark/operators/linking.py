@@ -27,6 +27,10 @@ Small vocabularies run steps 2-5 on the driver from one collect
 (_minhash_signature), one char-shingle Jaccard (_jaccard) and one
 union-find (_min_id_components), so they differ only in where the work
 runs; exact verification means banding decides cost, never output.
+Driver-side results (that route's map and block stats, the driver
+union-find's labels) go back to Spark through Arrow
+(session.driver_frame): a Python-list frame would run one Python-worker
+task per slice when read.
 
 Scale notes: band self-join is the only potentially-skewed shuffle and
 is protected by the block cap + AQE skew-join; the CC loop operates on
@@ -46,6 +50,7 @@ from pyspark.sql.functions import pandas_udf
 
 from docs2kg_spark.config import PipelineConfig
 from docs2kg_spark.functions.ids import entity_node_id
+from docs2kg_spark.session import driver_frame
 
 _FNV_PRIME = np.uint64(1099511628211)
 
@@ -262,7 +267,7 @@ def _cc_driver_side(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     the edge set is the graph of *near-dup surface pairs*, which is tiny
     relative to mentions/nodes."""
     labels = list(_min_id_components((r["a"], r["b"]) for r in edges.collect()).items())
-    ldf = nodes.sparkSession.createDataFrame(labels, "node_id string, comp string")
+    ldf = driver_frame(nodes.sparkSession, "node_id string, comp string", labels)
     return (
         nodes.select("node_id")
         .join(F.broadcast(ldf), on="node_id", how="left")
@@ -438,10 +443,10 @@ def build_canonical_map(
             # one slice/file: the map is dimension-sized (it feeds broadcast
             # joins downstream) — don't smear ~41 rows over default-parallelism
             # empty files
-            cmap = spark.createDataFrame(
-                out, "node_id string, text string, label string, canonical_id string"
+            cmap = driver_frame(
+                spark, "node_id string, text string, label string, canonical_id string", out
             ).coalesce(1)
-            block_stats = spark.createDataFrame([stats], _BLOCK_STATS_SCHEMA)
+            block_stats = driver_frame(spark, _BLOCK_STATS_SCHEMA, [stats])
             return cmap, block_stats
     pairs, block_stats = candidate_pairs(nodes, cfg)
     edges = verified_edges(pairs, cfg)

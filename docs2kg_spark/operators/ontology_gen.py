@@ -5,7 +5,10 @@ ontology's and writes the ontology back when new types appeared
 (semantic_kg/base.py:48-84); the LLM variant proposes types from
 document text (entity_type_llm.py:48-77).  Driver-side logic over a
 distributed aggregate: the distinct-labels aggregation runs on the
-cluster, the tiny set union on the driver.
+cluster, the tiny set union on the driver.  The ontology table is
+written by TableStore.write_rows (pyarrow, no Spark job): a Python-list
+frame written through Spark would run a job plus one Python-worker task
+per slice for a few dozen rows.
 """
 
 from __future__ import annotations
@@ -58,7 +61,7 @@ def save_ontology(store, ontology: Ontology, name: str = ONTOLOGY_TABLE) -> None
         + [("relation_type", r, None, None) for r in ontology.relation_types]
         + [("connection", rel, s, d) for rel, s, d in ontology.connections]
     )
-    store.write(store.spark.createDataFrame(rows, _ONTOLOGY_SCHEMA), name)
+    store.write_rows(rows, _ONTOLOGY_SCHEMA, name)
 
 
 def load_ontology(store, name: str = ONTOLOGY_TABLE) -> Ontology | None:

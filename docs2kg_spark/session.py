@@ -12,13 +12,34 @@ merely *shrunk* for local testing:
 - shuffle.partitions sized to cores locally; on a real cluster this is
   set to ~2-3x total cores via spark-submit conf.
 - session timezone pinned UTC so DuckDB oracle comparisons are stable.
+- generated-code cache sized to the KG system's working set
+  (CODEGEN_CACHE_ENTRIES): one distributed-linking build generates ~160
+  classes against Spark's default cache of 100, so with the default the
+  LRU missed on every class and every build in a JVM ran Janino again
+  for all of them (perfbench's seed-31 timed build, the JVM's second:
+  158 compiles with the default, 0 with the larger cache).
+- driver-side frames through Arrow (``driver_frame``): a frame built
+  from a Python list plans as ``Scan ExistingRDD`` and runs one
+  Python-worker task per slice when read; one built from a pyarrow table
+  plans as ``LocalTableScan`` and starts no Python task.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Distinct generated classes one JVM of the KG system holds, measured with
+# the cache unbounded: 162 for a distributed-linking run_pipeline (0 more
+# when the same build runs again), 2 more for a driver-linking build,
+# 41 + 40 + 62 for two process_kg_batch calls plus compact_kg, 13 for one
+# k_hop / PPR / degrees cycle — 320 in all.  Spark's default (100) is below
+# one build; 1,000 keeps the whole set with room for plan variants.  The
+# conf is static, so it can only be set when the session is built.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -76,6 +97,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # deterministic float/ts behavior for oracle comparison
         .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
         .config("spark.driver.memory", driver_mem)
@@ -96,3 +118,38 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def arrow_table(schema: str | StructType, rows: Sequence[tuple] = (), columns: Sequence | None = None):
+    """A pyarrow table typed by ``schema`` (a DDL string or a StructType),
+    from ``rows`` (tuples) or from ``columns`` (one sequence or pyarrow
+    array per field, cast to the field's type)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    if columns is None:
+        columns = list(zip(*rows)) if rows else [[] for _ in arrow]
+    return pa.table(
+        [c.cast(f.type) if isinstance(c, pa.Array) else pa.array(c, f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+
+
+def driver_frame(
+    spark: SparkSession,
+    schema: str | StructType,
+    rows: Sequence[tuple] = (),
+    columns: Sequence | None = None,
+) -> DataFrame:
+    """A DataFrame of driver-side data (see ``arrow_table``), built through
+    Arrow.  A Python-list ``createDataFrame`` plans as ``Scan ExistingRDD``
+    over defaultParallelism slices, and reading it runs one Python-worker
+    task per slice, each ~0.2 s of worker CPU on a 4-vCPU host before it
+    handles a row.  A frame from a pyarrow table plans as
+    ``LocalTableScan`` and starts no Python task: with the KG path's
+    driver-side frames built here, perfbench's seed-31 timed build runs 3
+    Python-worker tasks instead of 11."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(struct, rows, columns), struct)

@@ -27,6 +27,7 @@ from docs2kg_spark.operators.graph import materialize_kg
 from docs2kg_spark.operators.mentions import explode_extraction, extract_fused
 from docs2kg_spark.operators.segments import segment_transcripts
 from docs2kg_spark.plans.pipeline import INPUT_DDL, split_quarantine
+from docs2kg_spark.session import driver_frame
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +80,7 @@ _STATE_DDL = "node_id string, text string, label string, canonical_id string"
 def _read_or_empty(spark: SparkSession, store: TableStore, name: str, ddl: str) -> DataFrame:
     if store.exists(name):
         return store.read(name)
-    return spark.createDataFrame([], ddl)
+    return driver_frame(spark, ddl)
 
 
 def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
