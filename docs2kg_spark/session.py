@@ -22,11 +22,23 @@ merely *shrunk* for local testing:
   from a Python list plans as ``Scan ExistingRDD`` and runs one
   Python-worker task per slice when read; one built from a pyarrow table
   plans as ``LocalTableScan`` and starts no Python task.
+- Python workers started through ``pyworker`` (``worker_daemon_conf``),
+  which imports pyspark from a directory instead of Spark's archives:
+  with the archives first on the workers' path every task re-read their
+  zip directories, ~0.2 s of worker CPU per task on a 4-vCPU host; now
+  ~0.02 s.  Set only on a ``local[...]`` master with the package loaded
+  from a directory; elsewhere workers start through ``pyspark.daemon``.
+- driver heap (-Xms = -Xmx) from ``SPARK_DRIVER_MEMORY`` if set, else
+  half the memory this process may use (the cgroup's ``memory.max``
+  when one is set, else ``MemAvailable``), between 1 GB and 8 GB
+  (``default_driver_memory``): a second session on the same host then
+  gets half of what the first one left instead of a fixed 8 GB.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +52,64 @@ from pyspark.sql.types import StructType
 # one build; 1,000 keeps the whole set with room for plan variants.  The
 # conf is static, so it can only be set when the session is built.
 CODEGEN_CACHE_ENTRIES = 1000
+
+# bounds of the default driver heap (default_driver_memory), in MB
+DRIVER_HEAP_MIN_MB, DRIVER_HEAP_MAX_MB = 1024, 8192
+
+
+def local_slots(master: str) -> int | None:
+    """Task slots of a ``local[N]`` or ``local[*]`` master (``*`` is the
+    CPUs this process may run on); None for any other master."""
+    m = re.fullmatch(r"local\[(\d+|\*)\]", master)
+    if m is None:
+        return None
+    return len(os.sched_getaffinity(0)) if m.group(1) == "*" else int(m.group(1))
+
+
+def usable_memory_bytes(
+    cgroup_max: str = "/sys/fs/cgroup/memory.max", meminfo: str = "/proc/meminfo"
+) -> int | None:
+    """The cgroup's ``memory.max`` if one is set, else ``MemAvailable``;
+    None when neither can be read."""
+    try:
+        with open(cgroup_max) as f:
+            limit = f.read().strip()
+        if limit.isdigit():
+            return int(limit)
+    except OSError:
+        pass
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_memory(usable_bytes: int | None) -> str:
+    """Half of ``usable_bytes``, clamped to [DRIVER_HEAP_MIN_MB,
+    DRIVER_HEAP_MAX_MB]; the cap when the usable memory is unknown.  The
+    other half is left to the JVM's off-heap memory, the Python workers
+    and the driver process."""
+    if usable_bytes is None:
+        return f"{DRIVER_HEAP_MAX_MB}m"
+    return f"{min(DRIVER_HEAP_MAX_MB, max(DRIVER_HEAP_MIN_MB, usable_bytes // 2 // 2**20))}m"
+
+
+def worker_daemon_conf(master: str, session_file: str) -> dict[str, str]:
+    """Conf that starts Python workers through ``docs2kg_spark.pyworker``.
+    Only where workers can import it when the daemon starts: a local
+    master (workers share this host's files) and the package loaded from a
+    directory (``session_file`` is this module's file), whose parent goes
+    on the workers' path.  Elsewhere empty: Spark's ``pyspark.daemon``."""
+    if local_slots(master) is None or not os.path.isfile(session_file):
+        return {}
+    return {
+        "spark.python.daemon.module": "docs2kg_spark.pyworker",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(session_file))),
+    }
 
 
 def get_spark(
@@ -64,8 +134,8 @@ def get_spark(
         # the finer granularity is per-task overhead — noise at these
         # task sizes.  On a real fleet this is the operator-set
         # spark.sql.shuffle.partitions ≈ 2-4x total cores convention.
-        n = master[6:-1] if master.startswith("local[") else ""
-        shuffle_partitions = 4 * int(n) if n.isdigit() else 32
+        slots = local_slots(master)
+        shuffle_partitions = 4 * slots if slots else 32
 
     # --- virtualized-host hygiene -------------------------------------
     # This sandbox runs in a VM where memory unmap/remap traffic is
@@ -83,7 +153,7 @@ def get_spark(
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark_local"  # per-app spark-<uuid> subdirs
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(usable_memory_bytes())
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "268435456")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
 
@@ -115,7 +185,7 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_daemon_conf(master, __file__), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -146,7 +216,7 @@ def driver_frame(
     """A DataFrame of driver-side data (see ``arrow_table``), built through
     Arrow.  A Python-list ``createDataFrame`` plans as ``Scan ExistingRDD``
     over defaultParallelism slices, and reading it runs one Python-worker
-    task per slice, each ~0.2 s of worker CPU on a 4-vCPU host before it
+    task per slice, each ~0.02 s of worker CPU on a 4-vCPU host before it
     handles a row.  A frame from a pyarrow table plans as
     ``LocalTableScan`` and starts no Python task: with the KG path's
     driver-side frames built here, perfbench's seed-31 timed build runs 3
